@@ -148,38 +148,47 @@ class DuplicatesAndEditsSpec extends SparkSpec {
 
   // ---- ApplyEdits ------------------------------------------------------
 
+  /** the in-repo excerpt, plus the reference's edits.yaml where mounted */
+  private val editsFiles = (VoteFixtures.editsYaml +:
+    Seq(VoteFixtures.publishedEdits).filter(java.nio.file.Files.isRegularFile(_)))
+    .map(_.toString)
+
   test("parseYaml reads the reference edits.yaml") {
-    val e = ApplyEdits.parseYaml("/root/reference/edits.yaml")
-    assert(e.yearEdits.nonEmpty)
-    assert(e.yearEdits.exists(y => y.last == "Sabatina" && y.year == 2022 &&
-      y.chamber == Chamber.SENATE))
-    assert(e.yearEdits.exists(y => y.first.contains("Daniel") && y.last == "McNeill"))
-    // intent comes from the YAML value: 2015 Senate Smith/Stack are
-    // add-intent (value `true`); null-valued keys are removals
-    assert(e.yearEdits.exists(y => y.last == "Smith" && y.year == 2015 && !y.remove))
-    assert(e.yearEdits.exists(y => y.last == "Sabatina" && y.remove))
-    assert(e.voteRenames.nonEmpty)
+    for (file <- editsFiles) withClue(s"$file: ") {
+      val e = ApplyEdits.parseYaml(file)
+      assert(e.yearEdits.nonEmpty)
+      assert(e.yearEdits.exists(y => y.last == "Sabatina" && y.year == 2022 &&
+        y.chamber == Chamber.SENATE))
+      assert(e.yearEdits.exists(y => y.first.contains("Daniel") && y.last == "McNeill"))
+      // intent comes from the YAML value: 2015 Senate Smith/Stack are
+      // add-intent (value `true`); null-valued keys are removals
+      assert(e.yearEdits.exists(y => y.last == "Smith" && y.year == 2015 && !y.remove))
+      assert(e.yearEdits.exists(y => y.last == "Sabatina" && y.remove))
+      assert(e.voteRenames.nonEmpty)
+    }
   }
 
   test("ranged renames parsed from the REAL yaml apply to in-window votes") {
     // SnakeYAML parses bare dates as java.util.Date; a regression here
     // turns every ranged rename into a silent no-op
-    val e = ApplyEdits.parseYaml("/root/reference/edits.yaml")
-    val keller = e.voteRenames.find(r => r.before == "KELLER" && r.start.isDefined).get
-    assert(keller.start.get == "2019-09-16 00:00:00", s"got: ${keller.start.get}")
+    for (file <- editsFiles) withClue(s"$file: ") {
+      val e = ApplyEdits.parseYaml(file)
+      val keller = e.voteRenames.find(r => r.before == "KELLER" && r.start.isDefined).get
+      assert(keller.start.get == "2019-09-16 00:00:00", s"got: ${keller.start.get}")
 
-    val votes = Seq(
-      (1L, 100L, "KELLER", VoteCode.YEA, None: Option[Long]),
-      (1L, 101L, "KELLER", VoteCode.NAY, None: Option[Long])
-    ).toDF("session_id", "roll_id", "name", "vote", "member_id")
-    val rolls = Seq(
-      (100L, Timestamp.valueOf("2019-10-01 12:00:00")),   // inside window
-      (101L, Timestamp.valueOf("2019-01-01 12:00:00"))    // before window
-    ).toDF("roll_id", "stamp")
-    val out = ApplyEdits.applyVoteRenames(votes, rolls, Seq(keller))
-      .select("roll_id", "name").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(100L) == "KELLER, M. K.", "in-window vote must be renamed")
-    assert(out(101L) == "KELLER", "out-of-window vote must keep its name")
+      val votes = Seq(
+        (1L, 100L, "KELLER", VoteCode.YEA, None: Option[Long]),
+        (1L, 101L, "KELLER", VoteCode.NAY, None: Option[Long])
+      ).toDF("session_id", "roll_id", "name", "vote", "member_id")
+      val rolls = Seq(
+        (100L, Timestamp.valueOf("2019-10-01 12:00:00")),   // inside window
+        (101L, Timestamp.valueOf("2019-01-01 12:00:00"))    // before window
+      ).toDF("roll_id", "stamp")
+      val out = ApplyEdits.applyVoteRenames(votes, rolls, Seq(keller))
+        .select("roll_id", "name").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(out(100L) == "KELLER, M. K.", "in-window vote must be renamed")
+      assert(out(101L) == "KELLER", "out-of-window vote must keep its name")
+    }
   }
 
   test("year edit removes unique match and adds from neighbor year") {

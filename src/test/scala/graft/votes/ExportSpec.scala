@@ -96,14 +96,14 @@ class ExportSpec extends SparkSpec {
     // Reverse-engineer the relational model from melted CSVs, run the FULL
     // dump pipeline (completeness gate → W2 ordering → roster → matrix),
     // and byte-compare. Exercises exportLong itself, not just melt∘pivot.
+    // Inputs: every fixture, plus four published files where mounted.
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val ref = "/root/reference/vote_data"
-    for ((year, chamber, file) <- Seq(
-        (2023, Chamber.HOUSE, s"$ref/2023/House.csv"),
-        (2023, Chamber.SENATE, s"$ref/2023/Senate.csv"),
-        (2007, Chamber.HOUSE, s"$ref/2007/House.csv"),
-        (2019, Chamber.SENATE, s"$ref/2019/Senate.csv"))) {
+    val published = Seq((2023, Chamber.HOUSE), (2023, Chamber.SENATE),
+      (2007, Chamber.HOUSE), (2019, Chamber.SENATE))
+      .flatMap { case (y, c) => VoteFixtures.published(y, c) }
+    for (m <- VoteFixtures.matrices ++ published) {
+      val (year, chamber, file) = (m.year, m.chamber, m.path)
       val melted = VoteMatrix.melt(spark, file, year, chamber)
 
       val rollsBase = melted
@@ -154,21 +154,24 @@ class ExportSpec extends SparkSpec {
 
   test("writeAllDistributed emits byte-identical files to the per-group pivot path") {
     // the distributed single-shuffle export and the driver-loop verifier
-    // must agree byte-for-byte; also pin against a published golden file
-    // via the melt roundtrip
-    val ref = "/root/reference/vote_data"
-    val melted = VoteMatrix.melt(spark, s"$ref/2023/House.csv", 2023, Chamber.HOUSE)
-      .unionByName(VoteMatrix.melt(spark, s"$ref/2019/Senate.csv", 2019, Chamber.SENATE))
+    // must agree byte-for-byte; also pin both against the input files via
+    // the melt roundtrip (pivot∘melt = id): every fixture, plus two
+    // published files where mounted
+    val inputs = VoteFixtures.matrices ++
+      VoteFixtures.published(2023, Chamber.HOUSE) ++
+      VoteFixtures.published(2019, Chamber.SENATE)
+    val melted = inputs.map(m => VoteMatrix.melt(spark, m.path, m.year, m.chamber))
+      .reduce(_ unionByName _)
     val d1 = java.nio.file.Files.createTempDirectory("graft_wad_").toString
     val d2 = java.nio.file.Files.createTempDirectory("graft_wa_").toString
     Export.writeAllDistributed(spark, melted, d1)
     Export.writeAll(spark, melted, d2)
-    for (rel <- Seq("2023/House.csv", "2019/Senate.csv")) {
+    for (m <- inputs; rel = m.rel) {
       val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d1, rel))
       val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d2, rel))
-      val g = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(ref, rel))
+      val g = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(m.path))
       assert(java.util.Arrays.equals(a, b), s"$rel: distributed ≠ pivot path")
-      assert(java.util.Arrays.equals(a, g), s"$rel: distributed ≠ published golden bytes")
+      assert(java.util.Arrays.equals(a, g), s"${m.path}: distributed ≠ input bytes")
     }
   }
 

@@ -87,7 +87,9 @@ object FindDuplicates {
     * old→new mapping is well-defined.
     */
   def mergeGroups(pairs: DataFrame): Seq[Merge] = {
-    val rows = pairs.orderBy("id1", "id2").collect()
+    // a handful of rows: sorting them here saves the sampling and sort jobs
+    // of a distributed orderBy
+    val rows = pairs.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
     val parent = collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
       val p = parent.getOrElse(x, x)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** Entity resolution: link free-text voter names on roll calls to canonical
   * member records (reference: match_names.py:13-47 pass 1,
   * match_names.py:139-156 pass 2).
@@ -33,17 +35,14 @@ object MatchNames {
   final case class Result(matches: DataFrame, missingNames: DataFrame,
                           unmatchedMembers: DataFrame)
 
-  /** @param voterNames distinct voter names: (year, chamber, name)
-    * @param roster     members serving: (year, chamber, member_id, first,
-    *                   middle, last, suffix) — nulls allowed in name parts
-    * @return matches (year, chamber, name, member_id, method), plus the
-    *         unmatched residue on both sides
-    */
   /** Hard cap on pass-2 residue rows pulled to the driver; see [[run]]. */
   val DefaultMaxResidue = 100000
 
-  def run(spark: SparkSession, voterNames: DataFrame, roster: DataFrame,
-          maxResidue: Int = DefaultMaxResidue): Result = {
+  /** Pass 1, the blocked fuzzy join (match_names.py:13-47), unmaterialized:
+    * (year, chamber, name, member_id, method) for every voter name that
+    * resolves to exactly one distinct roster name tuple of its block.
+    */
+  private[votes] def pass1(voterNames: DataFrame, roster: DataFrame): DataFrame = {
     val probes = voterNames
       .withColumn("_p", parseProbe(col("name")))
       .withColumn("_block", lower(col("_p._3")))
@@ -78,13 +77,31 @@ object MatchNames {
       .withColumn("_hit",
         when(col("_n_last") === 1, col("_hit_single")).otherwise(col("_hit_multi")))
 
-    val fuzzyMatches = joined
+    joined
       .groupBy("year", "chamber", "name")
       .agg(min(when(col("_hit"), col("member_id"))).as("member_id"),
         countDistinct(when(col("_hit"), col("_ntuple"))).as("_n_hits"))
       .filter(col("_n_hits") === 1)
       .select(col("year"), col("chamber"), col("name"), col("member_id"),
         lit("fuzzy").as("method"))
+  }
+
+  /** Runs pass 1 once (one eager local checkpoint), pulls both residues to
+    * the driver in one action, runs pass 2 there, and builds the residue
+    * frames from the rows the driver holds, so no consumer of the
+    * [[Result]] re-runs the fuzzy join.
+    *
+    * @param voterNames distinct voter names: (year, chamber, name)
+    * @param roster     members serving: (year, chamber, member_id, first,
+    *                   middle, last, suffix) — nulls allowed in name parts
+    * @param maxResidue cap on the unmatched rows of each side that pass 2
+    *                   may pull to the driver
+    * @return matches (year, chamber, name, member_id, method), plus the
+    *         unmatched residue on both sides
+    */
+  def run(spark: SparkSession, voterNames: DataFrame, roster: DataFrame,
+          maxResidue: Int = DefaultMaxResidue): Result = {
+    val fuzzyMatches = pass1(voterNames, roster).localCheckpoint(true)
 
     // ---- residue after pass 1
     val missing1 = voterNames.join(fuzzyMatches, Seq("year", "chamber", "name"), "left_anti")
@@ -95,17 +112,22 @@ object MatchNames {
     // ---- pass 2: substring fixed point on the driver (match_names.py:139-156).
     // The residue is per-group tiny under the reference's data model, but a
     // degraded pass 1 (e.g. a broken blocking key matching nothing) would
-    // make these collects unbounded — head(cap+1) bounds driver memory and
-    // the require fails loudly with a diagnosis instead of OOMing.
-    val missingRows = missing1.select("year", "chamber", "name").head(maxResidue + 1)
+    // make the pull unbounded — capping each side at cap+1 rows bounds
+    // driver memory and the require fails loudly with a diagnosis instead
+    // of OOMing. Both sides come back in one action, each as a struct
+    // column that is null on the other side's rows.
+    val residue = missing1.select(struct(missing1.columns.toSeq.map(col): _*).as("_v"))
+      .limit(maxResidue + 1)
+      .unionByName(unmatched1.select(struct(unmatched1.columns.toSeq.map(col) :+
+        upper(coalesce(col("last"), lit(""))).as("_last_u"): _*).as("_r"))
+        .limit(maxResidue + 1), allowMissingColumns = true)
+      .collect()
+    val missingRows = residue.filterNot(_.isNullAt(0)).map(_.getStruct(0))
     require(missingRows.length <= maxResidue,
       s"MatchNames pass 2: unmatched voter-name residue exceeds $maxResidue rows — " +
         "pass 1 has degraded (check the blocking key / roster join); refusing " +
         "the driver-side fixed point")
-    val unmatchedRows = unmatched1
-      .select(col("year"), col("chamber"), col("member_id"),
-        upper(coalesce(col("last"), lit(""))).as("last_u"))
-      .head(maxResidue + 1)
+    val unmatchedRows = residue.filterNot(_.isNullAt(1)).map(_.getStruct(1))
     require(unmatchedRows.length <= maxResidue,
       s"MatchNames pass 2: unmatched roster residue exceeds $maxResidue rows — " +
         "pass 1 has degraded (check the blocking key / roster join); refusing " +
@@ -114,16 +136,16 @@ object MatchNames {
     val extra = Vector.newBuilder[Row]
     val groups = (missingRows.map(r => (r.getInt(0), r.getInt(1))) ++
       unmatchedRows.map(r => (r.getInt(0), r.getInt(1)))).distinct
-    // group the residue once; the previous shape rescanned both arrays per
-    // (year, chamber)
     val missingByGroup = missingRows.toIndexedSeq.groupBy(r => (r.getInt(0), r.getInt(1)))
     val unmatchedByGroup = unmatchedRows.toIndexedSeq.groupBy(r => (r.getInt(0), r.getInt(1)))
     for ((y, c) <- groups) {
       val missingNames = collection.mutable.LinkedHashSet[String](
         missingByGroup.getOrElse((y, c), IndexedSeq.empty).map(_.getString(2)): _*)
       val unmatchedByLast = collection.mutable.LinkedHashMap[String, List[Long]]()
-      for (r <- unmatchedByGroup.getOrElse((y, c), IndexedSeq.empty))
-        unmatchedByLast(r.getString(3)) = unmatchedByLast.getOrElse(r.getString(3), Nil) :+ r.getLong(2)
+      for (r <- unmatchedByGroup.getOrElse((y, c), IndexedSeq.empty)) {
+        val lastU = r.getString(r.length - 1)
+        unmatchedByLast(lastU) = unmatchedByLast.getOrElse(lastU, Nil) :+ r.getLong(2)
+      }
 
       var changed = true
       while (changed) {
@@ -144,19 +166,23 @@ object MatchNames {
       }
     }
 
+    val extraRows = extra.result()
     val extraSchema = StructType(Seq(
       StructField("year", IntegerType), StructField("chamber", IntegerType),
       StructField("name", StringType), StructField("member_id", LongType),
       StructField("method", StringType)))
-    val extraDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(extra.result().toSeq), extraSchema)
-
-    val matches = fuzzyMatches.unionByName(extraDf)
+    // the residue minus what pass 2 matched, with the columns and types of
+    // the anti-joins that produced it
+    val matchedNames = extraRows.map(r => (r.getInt(0), r.getInt(1), r.getString(2))).toSet
+    val matchedIds = extraRows.map(r => (r.getInt(0), r.getInt(1), r.getLong(3))).toSet
+    def local(rows: Seq[Row], schema: StructType) = spark.createDataFrame(rows.asJava, schema)
     Result(
-      matches,
-      missing1.join(matches, Seq("year", "chamber", "name"), "left_anti"),
-      unmatched1.join(matches.select("year", "chamber", "member_id"),
-        Seq("year", "chamber", "member_id"), "left_anti"))
+      fuzzyMatches.unionByName(local(extraRows, extraSchema)),
+      local(missingRows.toSeq.filterNot(r =>
+        matchedNames((r.getInt(0), r.getInt(1), r.getString(2)))), missing1.schema),
+      local(unmatchedRows.toSeq
+        .filterNot(r => matchedIds((r.getInt(0), r.getInt(1), r.getLong(2))))
+        .map(r => Row.fromSeq(r.toSeq.dropRight(1))), unmatched1.schema))
   }
 
   /** Per-group resolution stats with the reference's integer-floor percent

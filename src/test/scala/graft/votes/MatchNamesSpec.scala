@@ -1,13 +1,30 @@
 package graft.votes
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** ER pipeline tests: blocked fuzzy pass + substring fixed point
   * (reference: match_names.py).
   */
-class MatchNamesSpec extends SparkSpec {
+class MatchNamesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
+
+  /** The pass-1 blocking join: a physical join keyed on `_block`. */
+  private def blockJoins(plan: SparkPlan): Seq[SparkPlan] = collect(plan) {
+    case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "_block")) => j
+  }
 
   private lazy val roster = Seq(
     (2023, Chamber.HOUSE, 1L, "Patrick", "J.", "Harkins", null),
@@ -117,13 +134,85 @@ class MatchNamesSpec extends SparkSpec {
   }
 
   test("ER join plan stays blocked (no cartesian product)") {
-    val probes = namesDf("HARKINS", "MERSKI", "MIKE SMITH")
-    val plan = {
-      // reproduce pass-1 join shape and inspect the physical plan
-      val r = MatchNames.run(spark, probes, roster)
-      r.matches.queryExecution.executedPlan.toString
-    }
-    assert(!plan.contains("CartesianProduct"),
+    val plan = MatchNames.pass1(namesDf("HARKINS", "MERSKI", "MIKE SMITH"), roster)
+      .queryExecution.executedPlan
+    assert(blockJoins(plan).nonEmpty, s"pass 1 has no join keyed on _block:\n$plan")
+    assert(!plan.toString.contains("CartesianProduct"),
       s"ER join degraded to cartesian product:\n$plan")
+  }
+
+  test("roster-side residue over maxResidue fails loudly too") {
+    // HARKINS resolves, so the voter-name residue is empty, but seven
+    // roster members stay unmatched: over cap 2 on the roster side only
+    val e = intercept[IllegalArgumentException] {
+      MatchNames.run(spark, namesDf("HARKINS"), roster, maxResidue = 2)
+    }
+    assert(e.getMessage.contains("unmatched roster residue exceeds 2 rows"))
+  }
+
+  test("Result frames equal the anti-join formulas over pass 1") {
+    // BIZZ resolves by substring; SMITH stays ambiguous; 2021 House has
+    // voter names but no roster; 2023 Senate has roster members but no
+    // voter names
+    val names = Seq(
+      (2023, Chamber.HOUSE, "HARKINS"), (2023, Chamber.HOUSE, "BIZZ"),
+      (2023, Chamber.HOUSE, "SMITH"), (2021, Chamber.HOUSE, "HARKINS"),
+      (2021, Chamber.HOUSE, "NOSUCH")
+    ).toDF("year", "chamber", "name")
+    val senate = Seq(
+      (2023, Chamber.SENATE, 20L, "Jay", None: Option[String], "Costa", Some("Jr.")),
+      (2023, Chamber.SENATE, 21L, "Lisa", Some("M."), "Boscola", None: Option[String])
+    ).toDF("year", "chamber", "member_id", "first", "middle", "last", "suffix")
+    val members = roster.withColumn("suffix", col("suffix").cast("string"))
+      .unionByName(senate)
+
+    val r = MatchNames.run(spark, names, members)
+
+    // the reference: pass 1 unmaterialized, the residues and Result frames
+    // as anti-joins against it, pass 2's rows taken from the run
+    val fuzzy = MatchNames.pass1(names, members)
+    val missing1 = names.join(fuzzy, Seq("year", "chamber", "name"), "left_anti")
+    val unmatched1 = members.join(fuzzy.select("year", "chamber", "member_id"),
+      Seq("year", "chamber", "member_id"), "left_anti")
+    val matches = fuzzy.unionByName(r.matches.filter($"method" === "substring"))
+    val want = Seq(
+      "matches" -> matches,
+      "missingNames" -> missing1.join(matches, Seq("year", "chamber", "name"), "left_anti"),
+      "unmatchedMembers" -> unmatched1.join(matches.select("year", "chamber", "member_id"),
+        Seq("year", "chamber", "member_id"), "left_anti"))
+    val got = Seq(r.matches, r.missingNames, r.unmatchedMembers)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (((what, w), g) <- want.zip(got)) {
+      assert(g.schema.map(f => (f.name, f.dataType)) == w.schema.map(f => (f.name, f.dataType)),
+        what)
+      assert(rows(g) == rows(w), what)
+    }
+
+    // every case above is exercised
+    assert(rows(r.matches.select("name", "member_id", "method")) ==
+      Seq("[BIZZ,3,substring]", "[HARKINS,1,fuzzy]"))
+    assert(rows(r.missingNames) == Seq("[2021,1,HARKINS]", "[2021,1,NOSUCH]", "[2023,1,SMITH]"))
+    assert(r.unmatchedMembers.filter($"chamber" === Chamber.SENATE).count() == 2)
+  }
+
+  test("pass 1 runs once per run, however the Result is read") {
+    val executions = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executions.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executions.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = MatchNames.run(spark, namesDf("HARKINS", "BIZZ", "SMITH"), roster)
+      Seq(r.matches, r.missingNames, r.unmatchedMembers).foreach(_.collect())
+      // executions are reported in order on the listener bus: once the
+      // marker's has arrived, so have those of every earlier action
+      spark.range(1).select(lit(1).as("_marker")).collect()
+      eventually(timeout(30.seconds)) {
+        assert(executions.asScala.exists(_.analyzed.output.exists(_.name == "_marker")))
+      }
+      val runs = executions.asScala.count(qe => blockJoins(qe.executedPlan).nonEmpty)
+      assert(runs == 1, s"pass 1 ran $runs times")
+    } finally spark.listenerManager.unregister(listener)
   }
 }

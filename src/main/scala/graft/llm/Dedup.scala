@@ -2,6 +2,8 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** Document deduplication for large-scale training-data pipelines: exact,
   * n-gram Jaccard, MinHash+LSH, and SimHash near-dup detection.
@@ -451,6 +453,18 @@ object Dedup {
     spark.read.schema("n LONG, num_hashes LONG, bands LONG")
       .json(s"$path/meta").collect().head
 
+  /** The bands table as [[buildLshIndex]] and [[appendLshIndexBatch]]
+    * write it: the document id at the indexed corpus's id type, the band
+    * hash, and the two partition columns at the types partition discovery
+    * gives them (batch keys are never numeric, band indexes are small
+    * ints), so a probe's `ingest_batch` filter still prunes directories.
+    * Declared for the same reason as [[readLshMeta]]'s schema: a
+    * schemaless read runs an inference job first.
+    */
+  private[llm] def lshBandsSchema(idCol: String, idType: DataType): StructType =
+    StructType(Seq(StructField(idCol, idType), StructField("band_hash", LongType),
+      StructField("ingest_batch", StringType), StructField("band_idx", IntegerType)))
+
   /** Batch-key for the i-th ingest micro-batch. Zero-padded so keys
     * order lexicographically, and chosen so `"base"` (the initial build)
     * and `"adhoc..."` ([[appendLshIndex]]) both sort BELOW every batch
@@ -620,10 +634,12 @@ object Dedup {
         col(textCol))
     val deltaT = tagged(delta, "c")
     val corpusT = tagged(corpus, "b")
-    val idx0 = beforeBatch
-      .foldLeft(spark.read.parquet(s"$indexPath/bands")) { (df, k) =>
-        df.where(col("ingest_batch") < lit(k))
-      }
+    val bandsTable = spark.read
+      .schema(lshBandsSchema(idCol, corpus.schema(idCol).dataType))
+      .parquet(s"$indexPath/bands")
+    val idx0 = beforeBatch.foldLeft(bandsTable) { (df, k) =>
+      df.where(col("ingest_batch") < lit(k))
+    }
     // tombstoned ids ([[tombstoneLshIds]]) subtract HERE — before the
     // bucket join — so a deleted document can never form a candidate,
     // whatever the caller's `corpus` frame still contains

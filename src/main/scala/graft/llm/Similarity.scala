@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`): brute-force cosine top-k as the exact baseline and a
@@ -642,11 +643,12 @@ object Similarity {
     loadIvf(spark, path)
   }
 
-  /** The complete meta table of a persisted index, or None when it is
-    * absent/incomplete (no index yet, or a save killed mid-write) or
+  /** The complete meta table of a persisted IVF index, or None when it
+    * is absent/incomplete (no index yet, or a save killed mid-write) or
     * predates the n_base field (an index persisted by an older release
-    * sharing the same tmpdir root). ONE guard shared by both index
-    * kinds' count readers — each previously carried exactly half of it.
+    * sharing the same tmpdir root). The IVF-PQ twin reads its meta with
+    * the writer's schema ([[readIvfPqMeta]]) and treats a null n_base
+    * the way this treats an absent column.
     */
   private def metaWithNBase(spark: org.apache.spark.sql.SparkSession,
                             path: String): Option[org.apache.spark.sql.Row] = {
@@ -1243,7 +1245,7 @@ object Similarity {
     // the JUST-WRITTEN parquet's row-group metadata (each vector is
     // exactly m code rows), not a distinct() that would re-run the whole
     // encode lineage plus a corpus-wide shuffle.
-    val nBase = spark.read.parquet(s"$path/codes").count() / index.m
+    val nBase = countCodeRows(spark, path) / index.m
     Seq((index.m, index.sub, nBase)).toDF("m", "sub", "n_base")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
@@ -1265,28 +1267,79 @@ object Similarity {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Schemas the IVF-PQ writers fix ([[saveIvfPq]], [[appendIvfPqDelta]]).
+    * Every read of a persisted table declares one, so no read runs
+    * Spark's schema-inference job over the table first (the
+    * [[Dedup]] LSH meta discipline). All fields are nullable because a
+    * parquet read reports them so; IvfPqSchemaSpec pins declared ≡
+    * inferred for every table of a freshly built index.
+    */
+  private[llm] object IvfPqSchema {
+    val meta: StructType = StructType.fromDDL("m INT, sub INT, n_base BIGINT")
+    val centroids: StructType = StructType.fromDDL("_cl BIGINT, _centroid ARRAY<DOUBLE>")
+    val ucent: StructType = StructType.fromDDL("_cl BIGINT, _uc ARRAY<DOUBLE>")
+    val codebook: StructType = StructType.fromDDL("_s INT, _code INT, _cw ARRAY<DOUBLE>")
+    /** `cid` has the type of the corpus id it was encoded from; `_cl` is
+      * the partition column at the type partition discovery gives list
+      * labels (INT), so the probe's list filter still prunes directories. */
+    def codes(idType: DataType): StructType = StructType(Seq(
+      StructField("cid", idType), StructField("_s", IntegerType),
+      StructField("_code", IntegerType), StructField("_cl", IntegerType)))
+  }
+
+  /** The meta row of a complete persisted index (callers check
+    * [[indexComplete]] first). A meta written before `n_base` existed
+    * reads it as null. */
+  private def readIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
+                            path: String): org.apache.spark.sql.Row =
+    spark.read.schema(IvfPqSchema.meta).parquet(s"$path/meta").head()
+
+  /** Code rows of the persisted codes table — m per vector — from parquet
+    * row-group metadata (no data scan). Only the `_s` column is declared:
+    * a count reads none, and the id type is not needed to count. */
+  private def countCodeRows(spark: org.apache.spark.sql.SparkSession,
+                            path: String): Long =
+    spark.read.schema("_s INT").parquet(s"$path/codes").count()
+
+  /** The persisted codes table minus tombstoned ids. `_cl` is left as the
+    * partition-discovered type: [[ivfpqQuery]] filters on it FIRST
+    * (partition pruning needs the raw column), then normalizes to long.
+    * Tombstoned ids are subtracted here — before any candidate can form. */
+  private def readCodes(spark: org.apache.spark.sql.SparkSession, path: String,
+                        idType: DataType): DataFrame =
+    minusTombstones(
+      spark.read.schema(IvfPqSchema.codes(idType)).parquet(s"$path/codes"),
+      spark, path, "cid")
+
   /** Load a persisted index for querying. `corpus` supplies the exact
-    * vectors for the refine re-rank (base table, not index state). The
+    * vectors for the refine re-rank (base table, not index state) and the
+    * type of the codes' `cid`. Every table is read with its writer's
+    * schema ([[IvfPqSchema]]): the only job is the meta row's read. The
     * partition-discovered `_cl` comes back as int — normalized to long
     * AFTER the probe-side list filter so partition pruning still sees the
     * raw partition column.
     */
   def loadIvfPq(spark: org.apache.spark.sql.SparkSession, path: String,
                 corpus: DataFrame, idCol: String = "vec_id",
-                vecCol: String = "embedding"): IvfPqIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val c = cleanVectors(corpus, idCol, vecCol, "cid", "_cv")
+                vecCol: String = "embedding"): IvfPqIndex =
+    loadIvfPqWith(spark, path, readIvfPqMeta(spark, path), corpus, idCol, vecCol)
+
+  /** [[loadIvfPq]] over a meta row the caller already read. */
+  private def loadIvfPqWith(spark: org.apache.spark.sql.SparkSession,
+                            path: String, meta: org.apache.spark.sql.Row,
+                            corpus: DataFrame, idCol: String,
+                            vecCol: String): IvfPqIndex = {
+    def table(name: String, schema: StructType) =
+      spark.read.schema(schema).parquet(s"$path/$name")
+    // the refine side loses tombstoned ids too
+    val exact = minusTombstones(cleanVectors(corpus, idCol, vecCol, "cid", "_cv"),
+      spark, path, "cid")
     IvfPqIndex(
-      centroids = spark.read.parquet(s"$path/centroids"),
-      ucent = broadcast(spark.read.parquet(s"$path/ucent")),
-      codebook = spark.read.parquet(s"$path/codebook"),
-      // _cl left as the partition-discovered type: [[ivfpqQuery]] filters
-      // on it FIRST (partition pruning needs the raw column), then
-      // normalizes to long. Tombstoned ids are subtracted HERE — before
-      // any candidate can form — on both the codes and the refine side.
-      codes = minusTombstones(spark.read.parquet(s"$path/codes"),
-        spark, path, "cid"),
-      exact = minusTombstones(c, spark, path, "cid"),
+      centroids = table("centroids", IvfPqSchema.centroids),
+      ucent = broadcast(table("ucent", IvfPqSchema.ucent)),
+      codebook = table("codebook", IvfPqSchema.codebook),
+      codes = readCodes(spark, path, corpus.schema(idCol).dataType),
+      exact = exact,
       m = meta.getAs[Int]("m"), sub = meta.getAs[Int]("sub"))
   }
 
@@ -1338,8 +1391,10 @@ object Similarity {
     * which [[ivfpqRetrainDue]] bounds by delta share.
     *
     * `grownCorpus` (base ∪ delta) supplies exact vectors for the refine
-    * re-rank of the returned index. Frequent small appends accumulate
-    * small files per list partition; the full retrain that
+    * re-rank of the returned index. The index is loaded once: the append
+    * leaves the model tables as they were, so the returned index reuses
+    * them and re-reads only the codes listing. Frequent small appends
+    * accumulate small files per list partition; the full retrain that
     * [[maintainIvfPq]] eventually triggers doubles as the compaction.
     */
   def appendIvfPqDelta(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -1347,37 +1402,48 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): IvfPqIndex = {
     require(indexComplete(spark, path), s"no complete index at $path to append to")
-    val index = loadIvfPq(spark, path, grownCorpus, idCol, vecCol)
+    appendEncoded(spark, path, loadIvfPq(spark, path, grownCorpus, idCol, vecCol),
+      delta, idCol, vecCol)
+  }
+
+  /** [[appendIvfPqDelta]] against an index the caller already loaded. */
+  private def appendEncoded(spark: org.apache.spark.sql.SparkSession,
+                            path: String, index: IvfPqIndex, delta: DataFrame,
+                            idCol: String, vecCol: String): IvfPqIndex = {
     // dir-clustered write (see saveIvf / [[DirCluster]])
     DirCluster.clustered(encodeIvfPqDelta(index, delta, idCol, vecCol),
         salt = col("cid"), col("_cl"))
       .write.mode("append").partitionBy("_cl").parquet(s"$path/codes")
-    loadIvfPq(spark, path, grownCorpus, idCol, vecCol)
+    index.copy(codes = readCodes(spark, path, index.exact.schema("cid").dataType))
   }
 
-  /** (vectors at train, vectors now) for a persisted index, or None when
-    * the meta predates the n_base field (or records a degenerate base).
-    * The "now" count comes from parquet row-group metadata (no data
-    * scan). ONE definition feeding both [[ivfpqDeltaFraction]] and
-    * [[maintainIvfPq]]'s trigger, so the counting scheme cannot drift
-    * between them.
+  /** (vectors at train, vectors now) for a persisted index, given its
+    * meta row, or None when the meta predates the n_base field (read as
+    * null) or records a degenerate base. The "now" count comes from
+    * parquet row-group metadata (no data scan). ONE definition feeding
+    * both [[ivfpqDeltaFraction]] and [[maintainIvfPq]]'s trigger, so the
+    * counting scheme cannot drift between them.
     */
   private def ivfpqCounts(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Option[(Long, Long)] =
-    metaWithNBase(spark, path).flatMap { row =>
-      val nBase = row.getAs[Long]("n_base")
-      val nNow = spark.read.parquet(s"$path/codes").count() / row.getAs[Int]("m")
-      if (nBase <= 0) None else Some((nBase, nNow))
+                          path: String,
+                          meta: org.apache.spark.sql.Row): Option[(Long, Long)] =
+    if (meta.isNullAt(meta.fieldIndex("n_base"))) None
+    else {
+      val nBase = meta.getAs[Long]("n_base")
+      if (nBase <= 0) None
+      else Some((nBase, countCodeRows(spark, path) / meta.getAs[Int]("m")))
     }
 
   /** Share of the served index that was delta-appended since the last
     * full train: (vectors now − vectors at train) / vectors at train.
     * Pre-n_base indexes report 0 (never due — they predate the trigger;
-    * the next full rebuild stamps them).
+    * the next full rebuild stamps them), and so does a missing or
+    * incomplete index.
     */
   def ivfpqDeltaFraction(spark: org.apache.spark.sql.SparkSession,
                          path: String): Double =
-    ivfpqCounts(spark, path)
+    Option.when(indexComplete(spark, path))(readIvfPqMeta(spark, path))
+      .flatMap(ivfpqCounts(spark, path, _))
       .map { case (nBase, nNow) => (nNow - nBase).toDouble / nBase }
       .getOrElse(0.0)
 
@@ -1522,16 +1588,21 @@ object Similarity {
     val stamp = sourceStamp(spark, dir, grownCorpus)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (indexComplete(spark, path) && indexFresh(spark, path, stamp)
+    val complete = indexComplete(spark, path)
+    // read at most once per call, and only for a complete index: the meta
+    // row feeds both triggers' counts and the append path's load
+    lazy val meta = readIvfPqMeta(spark, path)
+    lazy val counts = ivfpqCounts(spark, path, meta)
+    if (complete && indexFresh(spark, path, stamp)
         && !tombstoneCompactionDue(spark, path, maxDeltaFraction,
-          ivfpqCounts(spark, path), "codes")) {
+          counts, "codes")) {
       // this exact merge already completed (a retry after a crash between
       // stamp and marker-clear lands here — finish the cleanup). Deletes
       // don't move the source stamp, so the freshness short-circuit must
       // NOT swallow a compaction-due index — tombstone share past the
       // threshold falls through to the retrain below.
       fs.delete(pendingDeltaFlag(spark, path), false)
-      return loadIvfPq(spark, path, grownCorpus, idCol, vecCol)
+      return loadIvfPqWith(spark, path, meta, grownCorpus, idCol, vecCol)
     }
     // Churn share, not just delta share: tombstoned vectors degrade the
     // index too (dead rows scanned on every probe, served corpus drifting
@@ -1540,9 +1611,9 @@ object Similarity {
     // compaction (the rebuild below excludes tombstoned ids and replaces
     // the directory, tombstone log included).
     val deltaShare =
-      if (!indexComplete(spark, path) || pendingDelta(spark, path))
+      if (!complete || pendingDelta(spark, path))
         Double.PositiveInfinity
-      else ivfpqCounts(spark, path)
+      else counts
         .map { case (nBase, nNow) =>
           (nNow + delta.count() + tombstoneCountIndexed(spark, path, "codes")
             - nBase).toDouble / nBase
@@ -1564,7 +1635,9 @@ object Similarity {
       // marker BEFORE the append, stamp after, clear last — every crash
       // window either serves the completed merge or forces the retrain
       fs.create(pendingDeltaFlag(spark, path), true).close()
-      val merged = appendIvfPqDelta(spark, path, delta, grownCorpus, idCol, vecCol)
+      val merged = appendEncoded(spark, path,
+        loadIvfPqWith(spark, path, meta, grownCorpus, idCol, vecCol), delta,
+        idCol, vecCol)
       stampIndex(spark, path, stamp)
       fs.delete(pendingDeltaFlag(spark, path), false)
       merged

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** ONE retraction-log kernel for every persisted index (LSH bands, IVF
   * lists, IVF-PQ codes): append-only parquet log of deleted ids,
@@ -23,6 +24,10 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object TombstoneLog {
 
+  /** The log's one column, as [[append]] writes it. Reads declare it, so
+    * no read runs a schema-inference job over the log first. */
+  val Schema: StructType = StructType.fromDDL("tomb_id STRING")
+
   def append(path: String, ids: DataFrame, idCol: String): Unit =
     ids.select(col(idCol).cast("string").as("tomb_id"))
       .filter(col("tomb_id").isNotNull).distinct()
@@ -34,8 +39,7 @@ private[graft] object TombstoneLog {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else Some(spark.read.parquet(path)
-      .select(col("tomb_id").cast("string").as("tomb_id")).distinct())
+    else Some(spark.read.schema(Schema).parquet(path).distinct())
   }
 
   def count(spark: SparkSession, path: String): Long =

@@ -92,12 +92,13 @@ object IndexedIngestDedup {
           val b = batch.toDF().localCheckpoint()
           val standing = baseCorpus.select(idCol, textCol).unionByName(
             survivorsBefore(s, survivorsDir, docSchema, Some(key)))
-          Dedup.incrementalDedupPairs(idxPath, b, standing, threshold,
-              idCol, textCol, beforeBatch = Some(key))
-            .write.mode("overwrite").parquet(s"$pairsDir/$key")
+          val pairs = Dedup.incrementalDedupPairs(idxPath, b, standing,
+            threshold, idCol, textCol, beforeBatch = Some(key))
+          pairs.write.mode("overwrite").parquet(s"$pairsDir/$key")
           // Survivors from the PUBLISHED pairs (not a recompute) so the
-          // appended set is exactly what downstream readers saw flagged.
-          val flagged = s.read.parquet(s"$pairsDir/$key")
+          // appended set is exactly what downstream readers saw flagged;
+          // read with the schema just written (no inference job).
+          val flagged = s.read.schema(pairs.schema).parquet(s"$pairsDir/$key")
             .select(col("id1").as(idCol)).distinct()
           b.join(flagged, Seq(idCol), "left_anti")
             .select(idCol, textCol)

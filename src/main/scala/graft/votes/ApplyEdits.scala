@@ -48,7 +48,9 @@ object ApplyEdits {
 
   /** Parse the reference's edits.yaml structure (apply_edits.py:9-21). */
   def parseYaml(path: String): Edits = {
-    val root = new Yaml().load[ju.Map[Any, Any]](new FileInputStream(path)).asScala
+    val in = new FileInputStream(path)
+    val root = try new Yaml().load[ju.Map[Any, Any]](in).asScala
+      finally in.close()
     val yearEdits = Vector.newBuilder[YearEdit]
     val voteRenames = Vector.newBuilder[VoteRename]
     val memberRenames = Vector.newBuilder[MemberRename]

@@ -96,9 +96,6 @@ object Bench {
     val failures = results.collect { case (k, (v, _, _), _) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2._1).filter(_ >= 0).sum
-    // r1 follow-up: j3/j5 bench spikes (~5s) were re-measured in isolation
-    // (graft.TimeOne) at 0.46s / ~1.0s warm — host noisy-neighbor window,
-    // not plan cost; nation auto-broadcasts in j3 (25 rows << threshold).
     val notes = "\"best-of-3 per query, value=min, per-query [min,max] in " +
       "'spread' — treat a round-over-round delta as a true regression only " +
       "when min_rN exceeds max_r(N-1) (r4 d13 and r5 g3/t12 'regressions' " +

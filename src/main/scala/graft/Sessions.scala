@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** One place to build the engine's SparkSession: local master sized by
   * `cores`, shuffle partitions matched to it (not the 200 default — at
   * local scale an oversized shuffle fan-out just burns task overhead),
-  * UTC, UI off, and the Graft extensions (native expressions) installed.
+  * UTC, UI off, and the Graft extensions (SQL names for the native
+  * expressions) installed.
   */
 object Sessions {
   def local(cores: String): SparkSession =
@@ -39,6 +40,9 @@ object Sessions {
       // set is a driver-memory/metaspace trade, not a data-size tune.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.session.timeZone", "UTC")
+      // TIMESTAMP(NANOS) parquet reads as long instead of failing the
+      // read; Tables.restoreTs turns it back into a timestamp
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-" +

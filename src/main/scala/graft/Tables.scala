@@ -12,19 +12,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Batch-inferred physical schema for `$dir/$name.parquet` (with
-    * nanosAsLong set so TIMESTAMP(NANOS) files read as long instead of
-    * erroring). Stream readers MUST derive their schema from this probe
+  /** Batch-inferred physical schema for `$dir/$name.parquet`
+    * (TIMESTAMP(NANOS) files read as long under the
+    * `spark.sql.legacy.parquet.nanosAsLong` setting [[Sessions.local]]
+    * fixes). Stream readers MUST derive their schema from this probe
     * rather than hard-coding one: the driver regenerates the testdata
     * between rounds and has already flipped events.ts between
     * TIMESTAMP(NANOS) and timestamp[us] once — a hard-coded LongType
     * schema plus an unconditional div-1000 silently compressed every
     * streaming timestamp 1000×.
     */
-  def physicalSchema(spark: SparkSession, dir: String, name: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def physicalSchema(spark: SparkSession, dir: String, name: String): StructType =
     spark.read.parquet(s"$dir/$name.parquet").schema
-  }
 
   /** Normalize a `ts` column to TimestampType whatever its physical
     * encoding: raw nanos (long) are truncated to micros — the same ns→µs
@@ -44,8 +43,6 @@ object Tables {
       case _ => df
     }
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
     restoreTs(spark.read.parquet(s"$dir/$name.parquet"))
-  }
 }

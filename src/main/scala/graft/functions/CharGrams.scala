@@ -83,8 +83,8 @@ case class CharGrams(left: Expression, right: Expression)
 
 /** Fold31 kernel: h = (h·31 + codepoint) mod 2³¹ over the codepoints of a
   * string — the portable SimHash token hash
-  * (`charFold31(transform(sequence(1, length(t)), i →
-  * ascii(substr(t, i, 1))))`) without the per-character interpreted
+  * (the 31-fold of `transform(sequence(1, length(t)), i →
+  * ascii(substr(t, i, 1)))`) without the per-character interpreted
   * dispatch and O(i) substr seeks. Folding over zero codepoints yields 0,
   * which is also what the HOF form produces for the empty token (its
   * descending sequence(1,0) emits two ascii('')=0 codes — 0 folds to 0

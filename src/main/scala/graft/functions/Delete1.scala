@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * forwarder object so generated code calls
   * `graft.functions.Delete1Kernel.eval(...)`.
   *
-  * Contract = the HOF chain it replaces in
-  * [[graft.ops.EditDistanceJoin.ed1Pairs]]:
+  * Contract = the higher-order chain Delete1Spec checks it against (the
+  * variant set of [[graft.ops.EditDistanceJoin.ed1Pairs]]):
   * `array_union(array(s), transform(sequence(0, length(s) − 1),
   * i → concat(substr(s, 1, i), substr(s, i + 2, length(s)))))` — the
   * string itself followed by its single-codepoint deletion variants in

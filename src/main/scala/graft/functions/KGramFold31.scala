@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** All k-gram 31-fold hashes of a code-point array in ONE rolling pass —
-  * the native form of `TextStats.charFold31` mapped over every window:
+  * the fold `h = (h·31 + code) mod 2³¹` over every k-window:
   * output[i] = (Σ_j codes[i+j]·31^(k-1-j)) mod 2³¹ for i in 0..n-k.
   *
   * The higher-order formulation (`transform(sequence(...), i =>

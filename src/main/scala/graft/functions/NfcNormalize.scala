@@ -21,10 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * changes CONTENT and belongs to an explicit cleaning stage, not a
   * default normalization.
   *
-  * Null in → null out. Registered as `graft_nfc`; library callers fall
-  * back to an equivalent UDF when the extension is absent (the
-  * BloomContains discipline) — bit-identical output either way, parity
-  * asserted in NfcSpec.
+  * Null in → null out. Registered as `graft_nfc` for SQL text;
+  * `TextStats.nfcNormalize` builds it directly. Parity with a Normalizer
+  * UDF is asserted in NfcSpec.
   */
 case class NfcNormalize(child: Expression) extends UnaryExpression {
 

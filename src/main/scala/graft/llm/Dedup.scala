@@ -1,7 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{BloomContains, CharGrams, Fold31, MinHashSig, WordShingles,
+  WordShinglesAll}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{unwrap, wrap}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType,
   StructField, StructType}
 
@@ -14,9 +17,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType,
   * - All-pairs Jaccard is quadratic and exists only as the verifier /
   *   small-scale oracle; the scale path is MinHash-LSH, where cost is
   *   bounded by (docs × bands) and bucket collision counts.
-  * - Hash families are explicit (xxhash64 + affine rehash mod a Mersenne
-  *   prime), so results are deterministic across runs, partitionings and
-  *   engines — no RNG state.
+  * - Hash families are explicit (xxhash64, and the i-th MinHash rehash
+  *   xxhash64(h, i)), so results are deterministic across runs,
+  *   partitionings and engines — no RNG state.
   */
 object Dedup {
 
@@ -59,18 +62,11 @@ object Dedup {
   def shingleSets(docs: DataFrame, n: Int, idCol: String = "doc_id",
                   textCol: String = "text"): DataFrame = {
     val words = split(col(textCol), " ")
-    // Native one-pass kernel when the Graft extension is installed (the
-    // HOF form pays an interpreted lambda dispatch + slice + array_join
-    // allocation PER WINDOW — measured as the dominant task time of the
-    // whole dedup family at sf0.1); byte-identical output, equality
-    // property-tested in WordShinglesSpec. Fallback keeps the pure
-    // built-in form for sessions without the extension.
-    val shingleExpr =
-      if (graft.plans.GraftExtensions.isInstalled("graft_shingles", docs.sparkSession))
-        call_function("graft_shingles", col(textCol), lit(n))
-      else
-        array_distinct(transform(sequence(lit(0), size(words) - n),
-          i => array_join(slice(words, i + 1, lit(n)), " ")))
+    // One-pass native kernel (the higher-order form pays a lambda
+    // dispatch + slice + array_join allocation PER WINDOW — measured as
+    // the dominant task time of the whole dedup family at sf0.1);
+    // equality with that form is property-tested in WordShinglesSpec.
+    val shingleExpr = wrap(WordShingles(unwrap(col(textCol)), unwrap(lit(n))))
     docs.where(size(words) >= n)
       .select(col(idCol), shingleExpr.as("shingle_set"))
   }
@@ -139,13 +135,9 @@ object Dedup {
                            idCol: String = "doc_id",
                            textCol: String = "text"): DataFrame = {
     val words = split(col(textCol), " ")
-    // native window kernel when installed (non-distinct variant of the
-    // graft_shingles byte-slice kernel; WordShinglesSpec pins equality)
-    val gramsExpr =
-      if (graft.plans.GraftExtensions.isInstalled("graft_shingles_all", docs.sparkSession))
-        call_function("graft_shingles_all", col(textCol), lit(n))
-      else transform(sequence(lit(0), size(words) - n),
-        i => array_join(slice(words, i + 1, lit(n)), " "))
+    // native window kernel (non-distinct variant of the graft_shingles
+    // byte-slice kernel; WordShinglesSpec pins equality)
+    val gramsExpr = wrap(WordShinglesAll(unwrap(col(textCol)), unwrap(lit(n))))
     val grams = docs.where(size(words) >= n)
       .select(col(idCol), explode(gramsExpr).as("shingle"))
     // reused by totals AND postings — cut once
@@ -303,7 +295,6 @@ object Dedup {
   def contaminationBloom(docs: DataFrame, bench: DataFrame, n: Int,
                          minOverlap: Long, fpp: Double = 0.01,
                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
     // Eager localCheckpoint: the benchmark shingle set feeds three
     // consumers (count, bloom build, confirm join) — without it each would
     // re-shingle the benchmark corpus. Bounded by the eval-set size, and
@@ -314,22 +305,14 @@ object Dedup {
     // eval sets are bounded, so the count + driver-side build are cheap
     val nBench = math.max(benchSh.count(), 1L)
     val bloom = benchSh.stat.bloomFilter(xxhash64(col("shingle")), nBench, fpp)
-    // Probe via the native codegen expression when the Graft extensions
-    // are installed (no UDF node: the filter ships as a binary literal —
-    // the same shape Spark uses for runtime bloom pushdown — and is
-    // deserialized once per executor); fall back to a broadcast + UDF on
-    // vanilla sessions. Both paths test a 64-bit hash, never the string.
-    val probe: Column =
-      if (graft.plans.GraftExtensions.isInstalled("graft_bloom_contains", spark)) {
-        val baos = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(baos)
-        call_function("graft_bloom_contains",
-          lit(baos.toByteArray), xxhash64(col("shingle")))
-      } else {
-        val bloomB = spark.sparkContext.broadcast(bloom)
-        udf((h: Long) => bloomB.value.mightContainLong(h))
-          .apply(xxhash64(col("shingle")))
-      }
+    // Probe with the native codegen expression (no UDF node: the filter
+    // ships as a binary literal — the same shape Spark uses for runtime
+    // bloom pushdown — and is deserialized once per executor). It tests
+    // a 64-bit hash, never the string.
+    val baos = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(baos)
+    val probe = wrap(BloomContains(unwrap(lit(baos.toByteArray)),
+      unwrap(xxhash64(col("shingle")))))
     val survivors = shingles(docs, n, idCol, textCol).where(probe)
     survivors.join(benchSh, "shingle")
       .groupBy(idCol)
@@ -683,12 +666,6 @@ object Dedup {
         col("jaccard"))
   }
 
-  /** Deterministic rehash family: the i-th hash of a base 64-bit hash is
-    * xxhash64(base, i) — index-derived, no RNG, and no overflow under ANSI
-    * arithmetic (an affine `a*h + b` family would overflow long multiply).
-    */
-  private def rehash(h: Column, i: Int): Column = xxhash64(h, lit(i))
-
   /** Per-document MinHash signature: `numHashes` minima over the shingle
     * set's rehashed values, computed PER ROW with `array_min` over the
     * shingle array — zero shuffle (the former explode + groupBy shape
@@ -700,22 +677,13 @@ object Dedup {
     */
   def minhashSignatures(docs: DataFrame, n: Int, numHashes: Int,
                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sets = shingleSets(docs, n, idCol, textCol)
-    // Native kernel when the extension is installed: the HOF form pays
-    // numHashes interpreted lambda dispatches PER SHINGLE plus numHashes
-    // intermediate arrays per row; the kernel is one pass with the same
-    // spark-catalyst XXH64 statics (bit-identical, property-tested in
-    // MinHashSigSpec). Fallback keeps the pure built-in form.
-    if (graft.plans.GraftExtensions.isInstalled("graft_minhash", sets.sparkSession))
-      sets.select(col(idCol),
-        call_function("graft_minhash", col("shingle_set"), lit(numHashes))
-          .as("signature"))
-    else
-      sets.withColumn("_hs", transform(col("shingle_set"), s => xxhash64(s)))
-        .select(col(idCol),
-          array((0 until numHashes).map(i =>
-            array_min(transform(col("_hs"), h => rehash(h, i)))): _*)
-            .as("signature"))
+    // One native pass with the spark-catalyst XXH64 statics, where the
+    // higher-order form pays numHashes lambda dispatches PER SHINGLE plus
+    // numHashes intermediate arrays per row (bit-identical,
+    // property-tested in MinHashSigSpec).
+    shingleSets(docs, n, idCol, textCol).select(col(idCol),
+      wrap(MinHashSig(unwrap(col("shingle_set")), unwrap(lit(numHashes))))
+        .as("signature"))
   }
 
   /** MinHash-LSH candidate pairs: band the signature, hash each band,
@@ -951,18 +919,12 @@ object Dedup {
     */
   def simhashPortable(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    // native fold31 when installed — the HOF chain pays a dispatch AND an
-    // O(i) substr seek per character of every token (Fold31Spec pins
+    // native fold31 — the higher-order chain pays a dispatch AND an O(i)
+    // substr seek per character of every token (CharGramsSpec pins
     // bit-identity, including the empty-token edge)
-    val tokenHash =
-      if (graft.plans.GraftExtensions.isInstalled("graft_fold31", docs.sparkSession))
-        call_function("graft_fold31", col("_t"))
-      else TextStats.charFold31(
-        transform(sequence(lit(1), length(col("_t"))),
-          i => ascii(col("_t").substr(i, lit(1))).cast("long")))
     assembleSimhash(
       docs.select(col(idCol), explode(split(col(textCol), " ")).as("_t"))
-        .withColumn("_h", tokenHash),
+        .withColumn("_h", wrap(Fold31(unwrap(col("_t"))))),
       bits = 31, idCol)
   }
 
@@ -1235,23 +1197,17 @@ object Dedup {
                                  idCol: String = "doc_id"): DataFrame =
     condenseSpans(flagged, k, Seq(idCol, "bench_id"))
 
-  /** (id, p, gram) for every k-gram position of every doc. Native kernel
-    * when the extension is installed: the HOF form pays an interpreted
-    * dispatch per position plus an O(p) codepoint seek inside every
-    * substr — quadratic in text length (CharGramsSpec pins equality);
-    * fallback keeps the pure built-in form.
+  /** (id, p, gram) for every k-gram position of every doc, by the native
+    * kernel: the higher-order form pays a dispatch per position plus an
+    * O(p) codepoint seek inside every substr — quadratic in text length
+    * (CharGramsSpec pins equality).
     */
   private def gramPositions(docs: DataFrame, k: Int,
                             idCol: String, textCol: String): DataFrame = {
-    val gramsExpr =
-      if (graft.plans.GraftExtensions.isInstalled("graft_chargrams", docs.sparkSession))
-        call_function("graft_chargrams", col(textCol), lit(k))
-      else transform(
-        sequence(lit(1), length(col(textCol)) - (k - 1)),
-        p => col(textCol).substr(p, lit(k)))
     docs
-      .filter(length(col(textCol)) >= k) // sequence(1, n<1) would DESCEND
-      .select(col(idCol), posexplode(gramsExpr))
+      .filter(length(col(textCol)) >= k)
+      .select(col(idCol),
+        posexplode(wrap(CharGrams(unwrap(col(textCol)), unwrap(lit(k))))))
       .toDF(idCol, "_p0", "gram")
       .select(col(idCol), (col("_p0") + 1).as("p"), col("gram"))
   }

@@ -1,8 +1,10 @@
 package graft.llm
 
+import graft.functions.DotProduct
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{unwrap, wrap}
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -46,19 +48,14 @@ object Similarity {
       .select(col(idCol).as(outId), quantized(col(vecCol)).as(outVec))
       .filter(dot(col(outVec), col(outVec)) > 0)
 
-  /** Exact dot product of two quantized vectors. Uses the native codegen
-    * [[graft.functions.DotProduct]] when [[graft.plans.GraftExtensions]] is
-    * installed on the active session (a tight primitive loop, no per-element
-    * lambda dispatch); falls back to built-in higher-order functions
-    * otherwise. Exact integer arithmetic makes summation order irrelevant,
-    * so both paths are bit-identical.
+  /** Exact dot product of two quantized vectors, as the native codegen
+    * [[graft.functions.DotProduct]] (a tight primitive loop, no per-element
+    * lambda dispatch). Exact integer arithmetic makes summation order
+    * irrelevant, so it is bit-identical to the higher-order
+    * `aggregate(zip_with(...))` form `DotProductSpec` checks it against.
     */
-  def dot(a: Column, b: Column): Column = {
-    val native = graft.plans.GraftExtensions.isInstalled("graft_dot")
-    if (native) call_function("graft_dot",
-      a.cast("array<double>"), b.cast("array<double>"))
-    else aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-  }
+  def dot(a: Column, b: Column): Column =
+    wrap(DotProduct(unwrap(a.cast("array<double>")), unwrap(b.cast("array<double>"))))
 
   /** Cosine similarity of two quantized vectors. */
   def cosine(a: Column, b: Column): Column =

@@ -1,7 +1,9 @@
 package graft.llm
 
+import graft.functions.{KGramFold31, NfcNormalize}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{unwrap, wrap}
 
 /** Text analysis for training-data pipelines: language ID, quality
   * scoring, token counting, and document fingerprinting. Everything in the
@@ -129,19 +131,11 @@ object TextStats {
   /** Unicode NFC normalization of a string column (x25) — the
     * canonical-composition pass that must run BEFORE any hashing/dedup:
     * decomposed and composed forms of the same text are byte-different.
-    * Uses the native codegen [[graft.functions.NfcNormalize]] when
-    * [[graft.plans.GraftExtensions]] is installed; falls back to an
-    * equivalent UDF otherwise (bit-identical output — java.text.Normalizer
-    * either way; parity asserted in NfcSpec).
+    * Runs as the native codegen [[graft.functions.NfcNormalize]]
+    * (java.text.Normalizer inside whole-stage codegen; parity with a
+    * Normalizer UDF asserted in NfcSpec).
     */
-  def nfcNormalize(c: Column): Column =
-    if (graft.plans.GraftExtensions.isInstalled("graft_nfc"))
-      call_function("graft_nfc", c)
-    else nfcUdf(c)
-
-  private lazy val nfcUdf = udf((s: String) =>
-    if (s == null) null
-    else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
+  def nfcNormalize(c: Column): Column = wrap(NfcNormalize(unwrap(c)))
 
   /** Stopword-marker profiles per language. Tiny on purpose: language ID
     * here is the classic top-stopword n-gram heuristic, and the marker
@@ -399,19 +393,6 @@ object TextStats {
       size(regexp_extract_all(t, lit(ipv4Re), lit(0))).as("n_ips"))
   }
 
-  /** Winnowing document fingerprint: minimum of rolling polynomial k-gram
-    * hashes per window — robust to small edits; UDF by design (stateful
-    * rolling loop), one call per document.
-    */
-  /** The engine-portable 31-fold hash both portable twins share:
-    * `h = (h·31 + code) mod 2³¹` over an array of code points — ONE
-    * definition, so [[winnowPortable]] and `Dedup.simhashPortable` can
-    * never desynchronize from each other or from the DuckDB oracles that
-    * replay this exact fold.
-    */
-  private[llm] def charFold31(codes: Column): Column =
-    aggregate(codes, lit(0L), (a, c) => (a * 31 + c) % 2147483648L)
-
   /** Engine-portable winnow fingerprint as NATIVE higher-order
     * expressions — no UDF, stays inside whole-stage codegen, and every
     * step is pure `mod 2³¹` integer arithmetic a SQL engine can replay
@@ -421,7 +402,7 @@ object TextStats {
     * engines refuse), min per full `window`, XOR-combined. Returns 0 for
     * texts shorter than k or with no full window, matching
     * [[winnowFingerprint]]'s guards. Stage the steps with withColumn at
-    * the call site if the per-row O(n·k) tree is hot — column reuse here
+    * the call site if the per-row tree is hot — column reuse here
     * duplicates subtrees.
     */
   def winnowPortable(text: Column, k: Int, window: Int): Column = {
@@ -430,13 +411,9 @@ object TextStats {
     val cs = transform(
       filter(split(text, ""), c => c =!= lit("")),
       c => ascii(c).cast("long"))
-    // native O(n) rolling pass when the extension is registered; the HOF
-    // form is the O(n·k) fallback — bit-identical (KGramFold31Spec)
-    val native = graft.plans.GraftExtensions.isInstalled("graft_kgram31")
-    val hs =
-      if (native) call_function("graft_kgram31", cs, lit(k))
-      else transform(sequence(lit(1), size(cs) - k + 1),
-        i => charFold31(slice(cs, i, lit(k))))
+    // native O(n) rolling pass over every k-gram; bit-identical to the
+    // O(n·k) per-window fold KGramFold31Spec checks it against
+    val hs = wrap(KGramFold31(unwrap(cs), unwrap(lit(k))))
     val numWin = (size(hs) / window).cast("long")
     val mins = transform(sequence(lit(0L), numWin - 1),
       w => array_min(slice(hs, (w * window + 1).cast("int"), lit(window))))
@@ -475,6 +452,10 @@ object TextStats {
         count_distinct(col(idCol)).as("n_docs"))
   }
 
+  /** Winnowing document fingerprint: minimum of rolling polynomial k-gram
+    * hashes per window — robust to small edits; UDF by design (stateful
+    * rolling loop), one call per document.
+    */
   val winnowFingerprint: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (text: String, k: Int, window: Int) =>
       if (text == null || text.length < k) 0L

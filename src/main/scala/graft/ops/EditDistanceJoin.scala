@@ -1,7 +1,9 @@
 package graft.ops
 
+import graft.functions.Delete1
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{unwrap, wrap}
 
 /** Edit-distance (Levenshtein ≤ 1) similarity self-join without a
   * cartesian product — the string-metric ER join the reference's fuzzy
@@ -39,26 +41,12 @@ object EditDistanceJoin {
   /** All (id1, id2, s1, s2) pairs with id1 < id2 and ed(s1, s2) ≤ 1. */
   def ed1Pairs(df: DataFrame, idCol: String, strCol: String): DataFrame = {
     val base = df.select(col(idCol).as("_id"), col(strCol).as("_s"))
-    // self + one-char deletions. Native kernel when the extension is
-    // installed (r13): the HOF form pays an interpreted lambda dispatch
-    // per position plus two O(position) codepoint seeks per substr —
-    // quadratic seek work per string; the kernel slices byte ranges off
-    // a one-pass offset table (bit-identity in Delete1Spec). Fallback
-    // keeps the pure built-in form; guard the empty string there
-    // (sequence(0,-1) would DESCEND, not produce an empty array).
-    val variantsExpr =
-      if (graft.plans.GraftExtensions.isInstalled("graft_del1", df.sparkSession))
-        call_function("graft_del1", col("_s"))
-      else {
-        val dels = when(length(col("_s")) > 0,
-          transform(sequence(lit(0), length(col("_s")) - 1),
-            i => concat(col("_s").substr(lit(1), i),
-              col("_s").substr(i + lit(2), length(col("_s"))))))
-          .otherwise(array().cast("array<string>"))
-        array_union(array(col("_s")), dels)
-      }
+    // self + one-char deletions: the kernel slices byte ranges off a
+    // one-pass offset table, where the higher-order form pays a lambda
+    // dispatch and two O(position) codepoint seeks per position
+    // (bit-identity in Delete1Spec)
     val variants = base.select(col("_id"), col("_s"),
-      explode(variantsExpr).as("_v"))
+      explode(wrap(Delete1(unwrap(col("_s"))))).as("_v"))
     val a = variants.select(col("_v"), col("_id").as("id1"), col("_s").as("s1"))
     val b = variants.select(col("_v"), col("_id").as("id2"), col("_s").as("s2"))
     a.join(b, "_v")

@@ -7,36 +7,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine extensions, installed via
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`): registers the native
-  * expressions so SQL and `call_function` resolve them. Library code
-  * (e.g. [[graft.llm.Similarity.dot]]) detects registration on the active
-  * session and falls back to built-in higher-order functions when the
-  * extension is absent, so nothing hard-depends on it.
+  * `builder.withExtensions(new GraftExtensions)`, as [[graft.Sessions]]
+  * does). They serve SQL text only: the function registrations let SQL
+  * (and `DuckDialect`'s `nfc_normalize → graft_nfc` mapping) name the
+  * native expressions, and the [[LevenshteinPrefilter]] optimizer rule
+  * guards levenshtein thresholds. Library code never probes for them —
+  * it builds each kernel expression directly through
+  * `org.apache.spark.sql.graft.ColumnBridge`, so it runs the same way on
+  * any session.
   */
-object GraftExtensions {
-  /** Whether a graft native function is registered on the ACTIVE session —
-    * the one probe library code uses before choosing `call_function` over
-    * the higher-order fallback. Centralized so a change to the detection
-    * rule applies to every native/fallback fork at once.
-    */
-  def isInstalled(name: String): Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists(name))
-
-  /** Probe the OWNING session of the DataFrame being planned (r13,
-    * advice item): the thread-local active session can differ from the
-    * session a frame belongs to (background threads, multi-session
-    * apps), and a mis-decided fork either emits an unresolvable
-    * call_function or silently takes the slow HOF path. Every fork with
-    * a DataFrame in hand uses this overload; Column-only helpers (dot,
-    * winnowPortable, nfc) have no frame to ask and keep the
-    * active-session probe.
-    */
-  def isInstalled(name: String,
-                  spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.catalog.functionExists(name)
-}
-
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1731,8 +1731,8 @@ object PipelineOps {
     //      the identical string and replays through DuckDB's
     //      nfc_normalize; per-doc code-point lengths before/after prove
     //      every pair composed (n_decomp − n_nfc = #e). Runs the native
-    //      codegen graft_nfc Expression on the gate session (UDF
-    //      fallback parity in NfcSpec). NOTE: DuckDB length() = code
+    //      codegen graft_nfc Expression (UDF parity in NfcSpec).
+    //      NOTE: DuckDB length() = code
     //      points (strlen is BYTES — wrong here). --------------------
     "x25_nfc_normalize" -> Q(
       """WITH d AS (SELECT doc_id,

@@ -16,8 +16,7 @@ class CharGramsSpec extends SparkSpec {
     sequence(lit(1), length(col("text")) - (k - 1)),
     p => col("text").substr(p, lit(k)))
 
-  // the charFold31 chain simhashPortable's fallback uses (inlined — the
-  // helper is private[llm])
+  // the per-char 31-fold chain graft_fold31 replaces in simhashPortable
   private def hofFold = aggregate(
     transform(sequence(lit(1), length(col("text"))),
       i => ascii(col("text").substr(i, lit(1))).cast("long")),

@@ -4,9 +4,9 @@ import graft.SparkSpec
 import graft.llm.TextStats
 import org.apache.spark.sql.functions._
 
-/** The graft_nfc native expression and its UDF fallback: canonical
+/** The graft_nfc native expression against its UDF reference: canonical
   * composition (decomposed e+U+0301 → composed U+00E9), idempotence,
-  * null passthrough, bit-identical native/fallback parity, and the
+  * null passthrough, bit-identical native/UDF parity, and the
   * codegen path actually engaging (plan shows the expression inside
   * WholeStageCodegen, not a BatchEvalPython/ScalaUDF node).
   */

@@ -1,6 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Timing main: best-of-3 wall time for every `SparkEntry` query, plus the
+  * full-corpus export where its reference corpus is present. The full
+  * per-entry JSON line goes to stdout and `bench_last.json`; a capped
+  * compact line comes last. A failing entry fails the run: both lines
+  * carry `"value": null` and the process exits with status 1.
+  */
 object Bench {
+
+  /** One entry's outcome: best-of-3 (min, max) seconds or the failure
+    * (`ExceptionClass: message`), with GC time and load average. */
+  private final case class Entry(name: String, time: Either[String, (Double, Double)],
+                                 gcMs: Long, load: Double)
+
+  /** The reference's published vote CSVs, melted by `export_writeall`. */
+  private val ExportCorpus = "/root/reference/vote_data"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -12,25 +27,15 @@ object Bench {
     Tables.t(spark, sfDir, "nation").count()
     // Best-of-3 per query, with the (min, max) spread recorded per query
     // in the JSON: the queries are deterministic, so the minimum is the
-    // best estimate of engine cost — the host this runs on shows
-    // multi-second noisy-neighbor spikes that would otherwise be
-    // attributed to whichever query they landed on (r4: d13 2.9↔16.4s,
-    // r5: g3/t12 "regressions" with unchanged code). The spread makes
-    // noise distinguishable from true regressions round-over-round:
-    // flag a regression only when min_rN > max_r(N-1). A query that
-    // throws reports -1 (NOT its time-to-throw, which would read as a
-    // speedup) and is listed in "failures".
-    // optional comma-separated name filter for fast local iteration (the
-    // driver sets no filter → full run); "export_writeall" selects the
-    // export block below
+    // best estimate of engine cost, and a noisy-neighbor spike would
+    // otherwise be charged to whichever query it landed on. Flag a
+    // regression only when this run's min exceeds the previous run's max.
+    // optional comma-separated name filter for fast local iteration (no
+    // filter → full run); "export_writeall" selects the export entry
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // Environment telemetry (r6 verdict #7): the r6 driver run was
-    // uniformly inflated by a noisy host (median ratio 1.14 with heavy
-    // tails on UNCHANGED trivial entries) and cost a verdict cycle to
-    // disprove. Record per-entry JVM GC time and the 1-minute system
-    // load average next to the timings so an inflated run self-diagnoses:
-    // high load / outsized gc_ms with a normal spread ⇒ environment, not
-    // a plan regression.
+    // Per-entry JVM GC time and the 1-minute load average sit next to the
+    // timings so an inflated run self-diagnoses: high load or outsized
+    // gc_ms with a normal spread means the host, not a plan regression.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def loadAvg(): Double = osBean.getSystemLoadAverage // -1.0 if unavailable
     def gcMs(): Long = {
@@ -44,111 +49,66 @@ object Bench {
       System.err.println(f"[bench] WARNING: system load $loadStart%.1f > " +
         f"cpus/2 (${cpusN / 2}%.1f) at start — timings on this run are " +
         "likely inflated by a noisy host; prefer the committed best-of-3")
+    def timed(name: String)(f: => Unit): Either[String, Double] = {
+      val t0 = System.nanoTime()
+      try { f; Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        val failure = s"${e.getClass.getName}: ${e.getMessage}"
+        System.err.println(s"[bench] $name failed: $failure")
+        Left(failure)
+      }
+    }
     val queryResults = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
-        }
+        def once() = timed(name)(fn(spark, sfDir).count())
+        val gc0 = gcMs()
+        // stops at the first failure, whose time-to-throw is never reported
+        val time = for (a <- once(); b <- once(); c <- once())
+          yield (Seq(a, b, c).min, Seq(a, b, c).max)
+        Entry(name, time, gcMs() - gc0, loadAvg())
       }
-      val gc0 = gcMs()
-      val runs = Seq(once(), once(), once())
-      val telemetry = (gcMs() - gc0, loadAvg())
-      (name, (if (runs.exists(_ < 0)) (-1.0, -1.0, -1.0)
-              else (runs.min, runs.min, runs.max)), telemetry)
-    }
     // Full-corpus export as a named entry (single run — IO-bound, and the
     // golden-byte spec covers correctness): meltAll over the reference's
-    // 38 published CSVs → the complete writeAll dump. Makes export
-    // throughput regressions visible in the round-over-round bench JSON.
-    val exportGc0 = gcMs()
-    val exportSec = if (!only.forall(_.contains("export_writeall"))) -2.0 else {
-      val t0 = System.nanoTime()
-      try {
-        val long = votes.VoteMatrix.meltAll(spark, "/root/reference/vote_data")
-        val dir = graft.Scratch.dir("graft_bench_export_")
-        votes.Export.writeAllDistributed(spark, long, dir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] export_writeall failed: ${e.getMessage}")
-        -1.0
+    // published CSVs → the complete writeAll dump. Where that corpus is
+    // absent the entry is skipped with its reason, not failed.
+    val wantExport = only.forall(_.contains("export_writeall"))
+    val haveCorpus = java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ExportCorpus))
+    val skipped =
+      if (wantExport && !haveCorpus)
+        Seq("export_writeall" -> s"reference corpus $ExportCorpus is absent")
+      else Nil
+    val results =
+      if (!wantExport || !haveCorpus) queryResults
+      else {
+        val gc0 = gcMs()
+        val time = timed("export_writeall") {
+          val long = votes.VoteMatrix.meltAll(spark, ExportCorpus)
+          votes.Export.writeAllDistributed(spark, long,
+            Scratch.dir("graft_bench_export_"))
+        }
+        queryResults :+ Entry("export_writeall", time.map(s => (s, s)),
+          gcMs() - gc0, loadAvg())
       }
-    }
-    val results = // -2.0 = filtered out by SPARK_GRAFT_BENCH_ONLY, omit entirely
-      if (exportSec == -2.0) queryResults
-      else queryResults :+ (("export_writeall",
-        (exportSec, exportSec, exportSec), (gcMs() - exportGc0, loadAvg())))
-    val qs = results.map { case (k, (v, _, _), _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val spread = results
-      .map { case (k, (_, lo, hi), _) => s"\"" + k + "\":[" + lo + "," + hi + "]" }
-      .mkString("{", ",", "}")
-    val gcJson = results
-      .map { case (k, _, (gc, _)) => s"\"" + k + "\":" + gc }
-      .mkString("{", ",", "}")
-    val loadJson = results
-      .map { case (k, _, (_, ld)) => s"\"" + k + "\":" + ld }
-      .mkString("{", ",", "}")
-    val failures = results.collect { case (k, (v, _, _), _) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.map(_._2._1).filter(_ >= 0).sum
-    val notes = "\"best-of-3 per query, value=min, per-query [min,max] in " +
-      "'spread' — treat a round-over-round delta as a true regression only " +
-      "when min_rN exceeds max_r(N-1) (r4 d13 and r5 g3/t12 'regressions' " +
-      "were host noise on unchanged code); 'gc_ms' = JVM GC time over the " +
-      "entry's 3 runs, 'load'/'load_start' = 1-min system load average — " +
-      "high load or outsized gc with a wide spread diagnoses an inflated " +
-      "host (the r6 driver run) without a re-run; " +
-      "j3/j5 isolated warm times 0.46s/1.0s (TimeOne); slowest entries " +
-      "(d2/d7/d9) are the deliberately-exact dedup verifiers + iterative " +
-      "connected components — their scale paths are d3 (LSH) and d8; " +
-      "d10 pays two extra bench-side jobs (count + bloom build) and e5 an " +
-      "iterative codebook build — fixed job-count overhead at toy scale, " +
-      "amortized at real data volume; stateful streaming entries t6-t10 " +
-      "run on the RocksDB state store (production backend — fixed " +
-      "per-microbatch store open/commit cost here, bounded memory at real " +
-      "state volume; t2 stays on the default heap-backed provider); " +
-      "streaming TimeOne warm isolates (r3): t6 2.8s, t10 1.0s, t2 1.3s — " +
-      "the t6 stream-stream join cost is micro-batch drain + 4 state " +
-      "stores/partition setup (stateless t10 pays 1.0s on the same " +
-      "harness), not state churn; export_writeall is a single run of the " +
-      "distributed writeAllDistributed path (one shuffle, per-group " +
-      "executor-side CSV assembly AND task-side writes; r5: meltAll " +
-      "ingest parses the 38 published CSVs in executor tasks too — " +
-      "~7s end-to-end, vs 26s driver-side melt, vs 616s for the r2 " +
-      "driver-loop pivot path); r3 " +
-      "TimeOne warm isolates: d7 4.7s, t12 7.1s (micro-batch drain + " +
-      "exact-verify stage, both per-invocation fixed costs), d4b 4.3s " +
-      "(verification twin — its 31-bit space deliberately saturates, " +
-      "2.1M pairs at sf0.1; production simhash is d4's 64-bit space); " +
-      "r4: e7 serves the PERSISTED IVF-PQ index (parquet, codes " +
-      "partitioned by list — first run pays one-time train+write, later " +
-      "runs measure the cold-loadable query path); g3 is the UNSAMPLED " +
-      "co-purchase graph (1.2M edges at sf0.1) via degree-oriented " +
-      "adjacency intersection (per-run time in the queries map — the r3 " +
-      "entry benched a %4 sample); g3b keeps the id-oriented twin on " +
-      "the sampled scope; r11: t38 (~15s) pays index build + 3 staged " +
-      "micro-batches x (probe + pairs/survivor writes + keyed append) + " +
-      "drain per invocation and d20 (~8s) pays build + tombstone + full " +
-      "compaction rewrite + probe - both are whole-LIFECYCLE entries " +
-      "whose steady state is the per-batch probe/append (d18's shape); " +
-      "d19's cut itself is 0.9s (span flagging dominates, stitch is " +
-      "per-row codegen); r12 graft.SteadyState isolates the lifecycle " +
-      "hot paths on a standing index at sf0.1: t38 probe 2.1s + append " +
-      "1.1s, d20 tombstoned-probe 3.2s, t18 maintain-append 2.1s, t39 " +
-      "delete 0.2s + probe 1.4s - regressions there no longer hide in " +
-      "build cost\""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"gc_ms":$gcJson,"load":$loadJson,"load_start":$loadStart,"failures":$failures,"notes":$notes,"sf":"$sfDir"}"""
+    def jsonMap(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = jsonMap(results.map(e => e.name -> e.time.fold(_ => "null", _._1.toString)))
+    val spread = jsonMap(results.map(e =>
+      e.name -> e.time.fold(_ => "null", { case (lo, hi) => s"[$lo,$hi]" })))
+    val gcJson = jsonMap(results.map(e => e.name -> e.gcMs.toString))
+    val loadJson = jsonMap(results.map(e => e.name -> e.load.toString))
+    val failures = results.collect { case Entry(k, Left(msg), _, _) => k -> msg }
+    val failJson = jsonMap(failures.map { case (k, msg) => k -> jsonStr(msg) })
+    val skipJson = jsonMap(skipped.map { case (k, why) => k -> jsonStr(why) })
+    // a failed entry has no time, so no total can be reported for the run
+    val total =
+      if (failures.nonEmpty) None
+      else Some(results.map(_.time.fold(_ => 0.0, _._1)).sum)
+    val json = s"""{"metric":"total","value":${total.fold("null")(_.toString)},"unit":"sec","queries":$qs,"spread":$spread,"gc_ms":$gcJson,"load":$loadJson,"load_start":$loadStart,"failures":$failJson,"skipped":$skipJson,"sf":${jsonStr(sfDir)}}"""
     println(json)
-    // The driver captures stdout with a tail cap, which has truncated the
-    // per-query map two rounds running ("parsed": null in BENCH_r2/r3).
-    // Persist the full line ourselves so the round-over-round regression
-    // signal survives regardless of stdout handling. Path overridable for
-    // checkouts not mounted at /root/repo.
+    // A stdout capture with a tail cap can truncate the per-query map;
+    // persist the full line so the per-entry comparison survives however
+    // stdout is handled. Path overridable for other checkouts.
     val benchOut = sys.env.getOrElse("GRAFT_BENCH_JSON",
       s"${System.getProperty("user.dir")}/bench_last.json")
     try java.nio.file.Files.writeString(
@@ -157,39 +117,45 @@ object Bench {
       System.err.println(s"[bench] could not write $benchOut: ${e.getMessage}")
     }
     spark.stop()
-    // The driver keeps only a ~2000-char stdout TAIL (which also contains
-    // sbt's trailing "[success] Total time: ..." line), and the full line
-    // above (239-entry queries/spread/gc/load maps + notes) far exceeds
-    // it — BENCH_r05..r08 all carry "parsed": null. r8's "compact" line
-    // still overflowed: 12 slowest entries with full-precision doubles +
-    // spread pushed the JSON head outside the window, so the tail held a
-    // line with its FRONT cut off. Emit a second, machine-first line LAST
-    // (after spark.stop(), which logs to stderr only) via a pure formatter
+    // A reader that keeps only a ~2000-char stdout tail (which also holds
+    // sbt's trailing "[success] Total time: ..." line) cannot parse the
+    // full line above. Emit a second, machine-first line LAST (after
+    // spark.stop(), which logs to stderr only) via a pure formatter
     // hard-capped at MaxCompactLen chars (unit-tested in BenchLineSpec):
     // headline metric + capped failures + the 5 slowest entries with
     // rounded gc/load telemetry, full data pointer at bench_last.json.
     // Dropping the other entries is deliberate — the regression rule needs
     // the slow tail, and the full map survives in the written file.
-    val slowest = results.filter(_._2._1 >= 0).sortBy(-_._2._1)
-      .map { case (k, (v, _, _), (gc, ld)) => (k, v, gc, ld) }
-    val failedNames = results.collect { case (k, (v, _, _), _) if v < 0 => k }
-    println(compactLine(total, results.size, failedNames, loadStart, slowest, sfDir))
+    val slowest = results
+      .collect { case Entry(k, Right((v, _)), gc, ld) => (k, v, gc, ld) }
+      .sortBy(-_._2)
+    println(compactLine(total, results.size, failures.map(_._1), loadStart, slowest, sfDir))
+    if (failures.nonEmpty) sys.exit(1)
   }
 
-  /** Hard ceiling for the machine-first stdout line. The driver's stdout
-    * tail is ~2000 chars and must also hold sbt's trailing
-    * "[success] Total time: ..." line (~70 chars) plus the "[info] "
-    * prefix; 1500 leaves comfortable margin. */
+  /** `s` as a JSON string literal. */
+  private def jsonStr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    } + "\""
+
+  /** Hard ceiling for the machine-first stdout line. A ~2000-char stdout
+    * tail must also hold sbt's trailing "[success] Total time: ..." line
+    * (~70 chars) plus the "[info] " prefix; 1500 leaves comfortable
+    * margin. */
   val MaxCompactLen = 1500
 
-  /** Pure formatter for the final compact bench line — the ONLY line the
-    * driver can reliably parse (everything longer is truncated by its
-    * stdout tail cap; see BENCH_r05..r08 "parsed": null). Keeps at most
-    * 5 slowest entries and at most 8 failure names (with a total count),
+  /** Pure formatter for the final compact bench line, the one line a
+    * reader of a capped stdout tail can always parse. `total` is None when
+    * an entry failed and is written as `"value":null`. Keeps at most 5
+    * slowest entries and at most 8 failure names (with a total count),
     * rounds doubles to fixed decimals, and drops entries from the end
     * until the line fits MaxCompactLen — so the invariant holds for any
     * entry-name lengths, not just today's. */
-  def compactLine(total: Double, nQueries: Int, failures: Seq[String],
+  def compactLine(total: Option[Double], nQueries: Int, failures: Seq[String],
       loadStart: Double, slowestAll: Seq[(String, Double, Long, Double)],
       sfDir: String): String = {
     def sec(d: Double) = f"$d%.3f"
@@ -202,7 +168,7 @@ object Bench {
       val slow = entries.map { case (k, v, gc, l) =>
         s""""$k":{"sec":${sec(v)},"gc_ms":$gc,"load":${ld(l)}}"""
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":$nQueries,$failJson,"load_start":${ld(loadStart)},"slowest":$slow,"full":"bench_last.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${total.fold("null")(sec)},"unit":"sec","n_queries":$nQueries,$failJson,"load_start":${ld(loadStart)},"slowest":$slow,"full":"bench_last.json","sf":"$sfDir"}"""
     }
     var keep = slowestAll.take(5)
     while (keep.nonEmpty && line(keep).length > MaxCompactLen) keep = keep.init

@@ -34,8 +34,8 @@ object Components {
                           id1: String = "id1", id2: String = "id2"): DataFrame =
     connectedComponentsCounted(edges, maxIter, id1, id2)._1
 
-  /** [[connectedComponents]] plus the executed round count — the Stress
-    * harness records rounds vs the big-star path's alternations on
+  /** [[connectedComponents]] plus the executed round count, which
+    * ComponentsSpec compares with the big-star path's alternations on
     * high-diameter graphs. */
   private[graft] def connectedComponentsCounted(
       edges: DataFrame, maxIter: Int = 25,
@@ -109,7 +109,7 @@ object Components {
     connectedComponentsBigStarCounted(edges, maxIter, id1, id2)._1
 
   /** [[connectedComponentsBigStar]] plus the executed alternation count
-    * (the Stress harness's O(log n) evidence). */
+    * (ComponentsSpec's O(log n) evidence). */
   private[graft] def connectedComponentsBigStarCounted(
       edges: DataFrame, maxIter: Int = 25,
       id1: String = "id1", id2: String = "id2"): (DataFrame, Int) = {

@@ -115,11 +115,11 @@ object Triangles {
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
 
-  /** The canonical co-purchase projection shared by g3/g3b/g4/g5, the
-    * stress probe, and the specs: parts sharing an order, one (u < v)
-    * edge per pair, distinct, lineage-cut (the edge list feeds degree
-    * builds, orientation joins, and closing joins). ONE definition so
-    * the entries and their stress/spec twins can never drift apart.
+  /** The canonical co-purchase projection shared by g3/g3b/g4/g5 and
+    * the specs: parts sharing an order, one (u < v) edge per pair,
+    * distinct, lineage-cut (the edge list feeds degree builds,
+    * orientation joins, and closing joins). ONE definition so the
+    * entries and their spec twins can never drift apart.
     * `lineitem` may be pre-filtered (g3b's bounded scope).
     */
   def coPurchaseEdges(lineitem: DataFrame): DataFrame = {

@@ -106,6 +106,31 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
+  test("bigstar alternations stay logarithmic on 64-node chains; min-label rounds track the diameter") {
+    // parallel chains of diameter 63, the shape the big-star path exists
+    // for: labels must equal the closed form (chain c's component is its
+    // first id) and min-label propagation's, while big-star needs
+    // O(log L) alternations and min-label O(diameter) rounds
+    val chainLen = 64L
+    val nNodes = 4 * chainLen
+    val edges = (0L until nNodes).filter(_ % chainLen != chainLen - 1)
+      .map(i => (i, i + 1)).toDF("id1", "id2")
+    val (bs, alternations) =
+      Components.connectedComponentsBigStarCounted(edges, maxIter = 25)
+    val viaStar = bs.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaStar.size === nNodes, s"bigstar labeled ${viaStar.size} of $nNodes nodes")
+    val wrong = viaStar.count { case (id, c) => c != id / chainLen * chainLen }
+    assert(wrong === 0, s"bigstar labels diverge from the closed form on $wrong nodes")
+    val (ml, rounds) = Components.connectedComponentsCounted(edges, maxIter = 80)
+    assert(ml.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === viaStar,
+      "bigstar and min-label propagation disagree on the chain graph")
+    assert(alternations <= 16,
+      s"bigstar needed $alternations alternations on a 64-chain, not O(log n)")
+    assert(rounds >= chainLen / 2,
+      s"min-label converged in $rounds rounds on diameter ${chainLen - 1}: " +
+        "the chains are not exercising the high-diameter case")
+  }
+
   test("bigstar: self-loops and duplicate edges are harmless; empty graph is empty") {
     val edges = Seq((7L, 7L), (1L, 2L), (2L, 1L), (1L, 2L)).toDF("id1", "id2")
     val got = Components.connectedComponentsBigStar(edges).collect()

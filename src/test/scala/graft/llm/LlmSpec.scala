@@ -243,6 +243,48 @@ class LlmSpec extends SparkSpec {
     assert(hits2 === Set((201L, 2L), (202L, 102L)), s"batch 2 vs standing: $hits2")
   }
 
+  /** Lower-case, strip punctuation, squeeze spaces: the shingle input. */
+  private def normalized(d: org.apache.spark.sql.DataFrame) =
+    d.select(col("doc_id"), trim(regexp_replace(regexp_replace(
+      lower(col("text")), "[^a-z0-9 ]", ""), " +", " ")).as("text"))
+
+  test("d18 churn: pairs found batch by batch equal a from-scratch build") {
+    // R−1 append batches land one by one on ONE index built from the base
+    // corpus. Each batch is probed against everything indexed so far plus
+    // its own within-batch pairs; the accumulated pairs must equal a d3
+    // build on the final corpus exactly. Both paths share the signatures
+    // and banding, so any drift (a stale meta read, a banding mismatch on
+    // append, a lost bucket) breaks multiset equality.
+    val replicas = 3
+    val (n, hashes, bands, tau) = (3, 64, 32, 0.6)
+    val base = normalized(docs).localCheckpoint(true)
+    val nBase = base.count()
+    val stride = base.agg(max("doc_id")).head.getLong(0) + 1
+    val idx = java.nio.file.Files.createTempDirectory("graft_d18_churn_").toString
+    Dedup.buildLshIndex(base, idx, n, hashes, bands)
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select(least(col("id1"), col("id2")), greatest(col("id1"), col("id2")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // base-internal pairs: indexed before churn began
+    var accumulated = pairs(Dedup.minhashLshPairs(base, n, hashes, bands, tau))
+    var standing = base
+    for (k <- 1 until replicas) {
+      val batch = base.select((col("doc_id") + k * stride).as("doc_id"),
+          concat(col("text"), lit(s" churn$k")).as("text"))
+        .localCheckpoint(true)
+      accumulated ++= pairs(Dedup.incrementalDedupPairs(idx, batch, standing, tau))
+      accumulated ++= pairs(Dedup.minhashLshPairs(batch, n, hashes, bands, tau))
+      Dedup.appendLshIndexBatch(batch, idx, Dedup.lshBatchKey(k))
+      standing = standing.unionByName(batch).localCheckpoint(true)
+    }
+    val rebuilt = pairs(Dedup.minhashLshPairs(standing, n, hashes, bands, tau))
+    assert(accumulated.sorted === rebuilt.sorted,
+      s"churned index diverged from rebuild: ${accumulated.size} vs ${rebuilt.size} pairs")
+    // every base doc should pair with most of its churn variants
+    assert(accumulated.size >= nBase * (replicas - 1) / 2,
+      s"too few pairs (${accumulated.size}) for $nBase docs x $replicas variants")
+  }
+
   test("d20 LSH delete + compact: tombstoned docs stop matching; compaction is probe-invariant") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_d20_idx_").toString
@@ -878,6 +920,33 @@ class LlmSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (r.getAs[Array[Byte]](1).length, r.getLong(2))).toMap
     assert(resized(1L) == ((25, 25L)))
     assert(resized(2L) == ((2, 2L)))
+  }
+
+  test("replicated corpus collapses through LSH pairs and components within bounds") {
+    // Replica k of doc d is d's text plus one marker word: a near-dup,
+    // never an exact dup. Every replica group should collapse toward one
+    // survivor. The upper bound (with LSH recall slack) catches
+    // under-merging; the lower bound catches a degenerate bucketing that
+    // collapses distinct documents (base docs may near-dup each other, so
+    // half is safe slack).
+    val replicas = 3
+    val base = docs.select("doc_id", "text")
+    val nBase = base.count()
+    val stride = base.agg(max("doc_id")).head.getLong(0) + 1
+    val corpus = (0 until replicas).map { k =>
+      if (k == 0) base
+      else base.select((col("doc_id") + k * stride).as("doc_id"),
+        concat(col("text"), lit(s" replica$k")).as("text"))
+    }.reduce(_ unionByName _)
+    val pairs = Dedup.minhashLshPairs(normalized(corpus), n = 3, numHashes = 64,
+      bands = 16, threshold = 0.5).select("id1", "id2")
+    val removed = Components.connectedComponents(pairs)
+      .where(col("id") =!= col("component")).select(col("id").as("doc_id"))
+    val survivors = corpus.join(removed, Seq("doc_id"), "left_anti").count()
+    val most = (nBase * (1 + 0.1 * (replicas - 1))).toLong
+    assert(survivors <= most, s"under-merged: $survivors survivors > $most")
+    assert(survivors >= nBase / 2,
+      s"over-merged: $survivors survivors < ${nBase / 2} of $nBase distinct docs")
   }
 
   test("chunk dedup drops cross-doc repeats, keeps order, empties all-dup docs") {

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
 /** Planted-corpus coverage for [[Dedup.duplicateSpans]]: exact span
   * boundaries for a known copied region, island separation past the k
@@ -97,6 +98,44 @@ class SpanDedupSpec extends SparkSpec {
     val b = novelty((d, kk) => Dedup.gramNoveltyHashed(d, kk))(rows: _*)
     assert(a === b)
     assert(a.nonEmpty && a(1L)._2 > a(2L)._2) // doc 1 owns the header mass
+  }
+
+  test("hashed twin equals the exact spans row for row; replica span sets are identical") {
+    // Every replica (0 included) of each sf0.001 doc gets an equal-length
+    // marker " \u0001X": a shared " \u0001" prefix and a final char unique
+    // to the replica. \u0001 never occurs in document text, so a gram
+    // holding it only matches other marker-crossing grams. Grams ending
+    // inside the shared prefix are byte-equal across all replicas of a
+    // doc (flagged everywhere); grams holding the unique char live in one
+    // replica only, flagged by the same base-doc tail count in each. So
+    // the flagged positions are replica-invariant by construction.
+    val replicas = 3
+    val base = graft.Tables.t(spark, "/root/testdata/sf0.001", "documents")
+      .select("doc_id", "text")
+    assert(base.where(col("text").contains("\u0001")).isEmpty,
+      "document text contains \\u0001: marker uniqueness is void")
+    val stride = base.agg(max("doc_id")).head.getLong(0) + 1
+    val corpus = (0 until replicas).map { r =>
+      base.select((col("doc_id") + r * stride).as("doc_id"),
+        concat(col("text"), lit(s" \u0001${('A' + r).toChar}")).as("text"))
+    }.reduce(_ unionByName _)
+    val hashed = Dedup.duplicateSpansHashed(corpus, k = 20, minDocs = 2)
+      .localCheckpoint(true)
+    val exact = Dedup.duplicateSpans(corpus, k = 20, minDocs = 2)
+    assert(hashed.exceptAll(exact).isEmpty && exact.exceptAll(hashed).isEmpty,
+      "hashed twin diverged from the exact spans")
+    // one (count, xor fingerprint) per replica, ids shifted back; span
+    // rows are distinct per doc, so xor cancellation cannot hide a change
+    val perReplica = hashed
+      .groupBy((col("doc_id") / stride).cast("long").as("replica"))
+      .agg(count(lit(1)).as("n"),
+        expr(s"bit_xor(xxhash64(doc_id % ${stride}L, span_start, span_end, n_grams))")
+          .as("fp"))
+      .collect()
+    assert(perReplica.length === replicas,
+      s"${perReplica.length} replicas produced spans, expected $replicas")
+    val fps = perReplica.map(r => (r.getLong(1), r.getLong(2))).distinct
+    assert(fps.length === 1, s"replica span sets diverged: ${fps.toSeq}")
   }
 
   test("docs shorter than k neither crash nor emit") {

@@ -60,6 +60,31 @@ class PageRankSpec extends SparkSpec {
     assert(run(edges, 3, parts = 1) == run(edges, 3, parts = 11))
   }
 
+  test("disjoint copies of the trade graph land on identical ranks") {
+    // R copies of the sf0.001 customer<->supplier graph, ids shifted by a
+    // stride taken from the data: every copy of a node must get the same
+    // rank, and every node must appear in every copy. A divergence is a
+    // partitioning or ordering leak into the arithmetic.
+    val replicas = 3
+    val dir = "/root/testdata/sf0.001"
+    val eo = graft.Tables.t(spark, dir, "orders").select("o_orderkey", "o_custkey")
+      .join(graft.Tables.t(spark, dir, "lineitem").select("l_orderkey", "l_suppkey"),
+        col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
+      .distinct()
+    val base = eo.unionByName(eo.select(col("dst").as("src"), col("src").as("dst")))
+    val stride = base.agg(greatest(max("src"), max("dst"))).head.getLong(0) + 1
+    val graph = (0 until replicas).map { k =>
+      base.select((col("src") + k * stride).as("src"), (col("dst") + k * stride).as("dst"))
+    }.reduce(_ unionByName _).repartition(7)
+    val perNode = PageRank.run(graph, iterations = 3)
+      .groupBy((col("node") % stride).as("base_node"))
+      .agg(countDistinct(col("rank_micro")).as("nr"), count(lit(1)).as("copies"))
+    assert(perNode.count() > 0)
+    val bad = perNode.filter(col("nr") =!= 1 || col("copies") =!= replicas).count()
+    assert(bad === 0, s"$bad base nodes diverged across replicas")
+  }
+
   test("dangling mass is dropped, not redistributed") {
     // 1 -> 2 only: node 2 has no out-edges; its mass vanishes each round
     val r = run(Seq((1L, 2L)), 2)

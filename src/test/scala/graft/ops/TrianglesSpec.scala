@@ -33,6 +33,26 @@ class TrianglesSpec extends SparkSpec {
       "triangle pipeline planned a nested-loop join")
   }
 
+  test("disjoint copies of the co-purchase graph get identical per-node counts") {
+    // Degrees replicate exactly and ids shift by a stride per copy, so the
+    // (degree, id) tie-break order, and with it the enumeration, is
+    // isomorphic across copies. Every copy of a node must count the same
+    // triangles; a divergence means orientation or intersection leaked
+    // partitioning order.
+    val replicas = 3
+    val e = copurchaseEdges("/root/testdata/sf0.001")
+    val stride = e.agg(greatest(max("u"), max("v"))).head.getLong(0) + 1
+    val graph = (0 until replicas).map { k =>
+      e.select((col("u") + k * stride).as("u"), (col("v") + k * stride).as("v"))
+    }.reduce(_ unionByName _)
+    val perNode = Triangles.perNodeCounts(Triangles.orientByDegree(graph))
+      .groupBy((col("node") % stride).as("base_node"))
+      .agg(countDistinct(col("n_triangles")).as("nc"), count(lit(1)).as("copies"))
+    assert(perNode.count() > 0, "no triangles in the sf0.001 co-purchase graph")
+    val bad = perNode.filter(col("nc") =!= 1 || col("copies") =!= replicas).count()
+    assert(bad === 0, s"$bad base nodes diverged across replicas")
+  }
+
   test("star graph: id-oriented wedge fan-out is C(n,2), degree-oriented is 0") {
     // K_{1,n} with the hot center at id 0: id-orientation points every
     // edge OUT of the center (lowest id), so the center generates all
@@ -55,7 +75,7 @@ class TrianglesSpec extends SparkSpec {
   }
 
   test("replicated skewed graph: oriented fan-out stays bounded as hubs grow") {
-    // StressGraph-style probe: R disjoint copies of (hub star + a few
+    // Replica probe: R disjoint copies of (hub star + a few
     // triangles). As the hub degree h doubles, id-oriented wedges grow
     // ~h² while degree-oriented wedges stay ~triangle-local. Both
     // enumerations must still agree on every copy's triangle counts.

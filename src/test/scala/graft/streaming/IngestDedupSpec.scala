@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 class IngestDedupSpec extends SparkSpec {
 
@@ -59,5 +60,53 @@ class IngestDedupSpec extends SparkSpec {
         .distinct().as[(Long, Long)].collect().toSet
       assert(again === pairs, "replayed id must not create new pairs")
     } finally q.stop()
+  }
+
+  test("identical replicas replayed through bucket state stay key-bounded") {
+    // R restriped copies of the sf0.001 corpus, one file per trigger, on
+    // RocksDB. Every replica's docs land in epoch 0's (band, hash)
+    // buckets, so state rows count buckets and must not scale with R.
+    val replicas = 3
+    val (bands, rowsPerBand) = (8, 2)
+    val ss = EventStream.statefulSession(spark)
+    val docs = graft.Tables.t(ss, "/root/testdata/sf0.001", "documents")
+      .select("doc_id", "text")
+    val nDocs = docs.count()
+    val stride = docs.agg(max("doc_id")).head().getLong(0) + 1
+    val work = java.nio.file.Files.createTempDirectory("graft_t12_replay_").toString
+    val epochs = (0 until replicas).map { k =>
+      val d = f"$work%s/docs/r$k%03d"
+      docs.withColumn("doc_id", col("doc_id") + lit(k * stride))
+        .coalesce(1).write.parquet(d)
+      d
+    }
+    EventStream.stampMtimeOrder(epochs)
+    val stream = ss.readStream
+      .schema(ss.read.parquet(epochs.head).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$work/docs/r*")
+    val q = IngestDedup.candidatePairs(stream, n = 5,
+        numHashes = bands * rowsPerBand, bands = bands)
+      .toDF("id1", "id2").writeStream
+      .format("noop").outputMode("append")
+      .option("checkpointLocation", s"$work/chk")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    val prog = q.recentProgress.toSeq
+      .filter(p => p.stateOperators.nonEmpty && p.numInputRows > 0)
+    assert(prog.size === replicas, s"one data batch per epoch: ${prog.size}")
+    val rows = prog.last.stateOperators.head.numRowsTotal
+    assert(rows > 0)
+    assert(rows <= bands * nDocs,
+      s"$rows state rows > ${bands * nDocs} buckets: state is not key-bounded")
+    // ids only: resident ids = docs × replicas × bands. The bound is loose
+    // (RocksDB reports its block-cache and memtable baseline too), but a
+    // state carrying text (~300 B per sf0.001 doc per bucket) or shingle
+    // sets would exceed it
+    val bytesPerId = prog.last.stateOperators.head.memoryUsedBytes.toDouble /
+      (nDocs * replicas * bands)
+    assert(bytesPerId <= 256.0,
+      f"$bytesPerId%.1f resident bytes per stored id: state carries more than ids")
   }
 }

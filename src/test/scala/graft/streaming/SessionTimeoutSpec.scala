@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import java.sql.Timestamp
 
 /** Cross-batch lifecycle of [[EventStream.sessionizeWithTimeout]] — the
@@ -90,5 +92,57 @@ class SessionTimeoutSpec extends SparkSpec {
         (base + 286 * 60000L) * 1000L, 3L))
       assert(got === want, s"expected one merged session: $got")
     } finally q.stop()
+  }
+
+  test("replayed epochs: timeout eviction keeps state O(users), closed epochs emit") {
+    // R replays of the sf0.001 events table, one file per trigger, on
+    // RocksDB. Each replay shifts event time by span + watermark delay +
+    // 2·gap, so epoch k+1's watermark passes every epoch-k session end +
+    // gap, and restripes user ids, so only timeout eviction removes epoch
+    // k's state: state must stay O(users), never O(users × epochs).
+    val replicas = 4
+    val gapMinutes = 30
+    val ss = EventStream.statefulSession(spark)
+    val base = graft.Tables.t(ss, "/root/testdata/sf0.001", "events")
+      .select("event_id", "ts", "user_id", "event_type", "value")
+    val r = base.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
+      countDistinct(col("user_id")), max(col("user_id"))).head()
+    val (minUs, maxUs, nUsers, userStride) =
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3) + 1)
+    val shift = (maxUs - minUs) + 3600L * 1000000L + 2 * gapMinutes * 60L * 1000000L
+    val work = java.nio.file.Files.createTempDirectory("graft_t16_replay_").toString
+    val epochs = (0 until replicas).map { k =>
+      val d = f"$work%s/events/r$k%03d"
+      base.withColumn("ts", timestamp_micros(unix_micros(col("ts")) + lit(k * shift)))
+        .withColumn("user_id", col("user_id") + lit(k * userStride))
+        .coalesce(1).write.parquet(d)
+      d
+    }
+    EventStream.stampMtimeOrder(epochs)
+    val stream = graft.Tables.restoreTs(ss.readStream
+      .schema(ss.read.parquet(epochs.head).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$work/events/r*"))
+    val q = EventStream.sessionizeWithTimeout(stream, gapMinutes).toDF().writeStream
+      .format("memory").queryName("t16replay").outputMode("append")
+      .option("checkpointLocation", s"$work/chk")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    val stateRows = q.recentProgress.toSeq
+      .filter(p => p.stateOperators.nonEmpty && p.numInputRows > 0)
+      .map(_.stateOperators.head.numRowsTotal)
+    assert(stateRows.size === replicas, s"one data batch per epoch: $stateRows")
+    // even the peak holds at most the live epoch's users plus one
+    // not-yet-evicted epoch
+    assert(stateRows.max <= 3 * nUsers,
+      s"state rows peaked at ${stateRows.max} for $nUsers users: eviction broke")
+    assert(stateRows.last <= 2 * nUsers,
+      s"final state ${stateRows.last} rows: timed-out sessions not removed")
+    // every closed epoch emits every user's sessions (data or timeout
+    // path); the final epoch's open sessions never emit
+    val sessions = ss.table("t16replay").count()
+    assert(sessions >= (replicas - 1) * nUsers,
+      s"only $sessions sessions for ${replicas - 1} closed epochs of $nUsers users")
   }
 }

@@ -76,16 +76,6 @@ object EventStream {
       .option("basePath", dir)
       .parquet(s"$dir/{documents.parquet}")
 
-  /** Force a deterministic FileStreamSource processing order over
-    * locally-written epoch directories: the source orders files by
-    * modification time with unstable tie-breaking, and back-to-back
-    * writes can land on ONE mtime (coarse-granularity filesystems) — a
-    * tie replayed out of order runs a later epoch first, and its
-    * watermark then drops the earlier epoch as late data. Stamps every
-    * file under `dirs(i)` with a strictly increasing per-dir mtime; no
-    * sleeps (the Thread.sleep(1100) workaround this replaces cost a
-    * second per boundary).
-    */
   /** Stage a frame as ONE parquet file at `stage/name` (coalesce to a
     * single part in a scratch dir, copy it in, drop the scratch) — the
     * micro-batch staging primitive behind every maxFilesPerTrigger=1
@@ -104,6 +94,16 @@ object EventStream {
     graft.Scratch.drop(tmp) // fully consumed by the copy above
   }
 
+  /** Force a deterministic FileStreamSource processing order over
+    * locally-written epoch directories: the source orders files by
+    * modification time with unstable tie-breaking, and back-to-back
+    * writes can land on ONE mtime (coarse-granularity filesystems) — a
+    * tie replayed out of order runs a later epoch first, and its
+    * watermark then drops the earlier epoch as late data. Stamps every
+    * file under `dirs(i)` with a strictly increasing per-dir mtime; no
+    * sleeps (the Thread.sleep(1100) workaround this replaces cost a
+    * second per boundary).
+    */
   def stampMtimeOrder(dirs: Seq[String]): Unit = {
     val t0 = System.currentTimeMillis() - dirs.size * 2000L
     dirs.zipWithIndex.foreach { case (d, i) =>

@@ -2,16 +2,24 @@ package graft.votes
 
 import java.io.FileInputStream
 import java.{util => ju}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.yaml.snakeyaml.Yaml
 import scala.jdk.CollectionConverters._
 
 /** Manual-curation edits (reference: apply_edits.py + edits.yaml):
-  * three edit kinds parsed from YAML and applied as broadcast-joined
-  * corrections — per-year service add/remove with neighbor-year fill (J5),
-  * voter-name renames (simple and roll-stamp-time-ranged, J2), and
-  * id/field-keyed member renames.
+  * three edit kinds parsed from YAML — per-year service add/remove with
+  * neighbor-year fill (J5), voter-name renames (simple and
+  * roll-stamp-time-ranged, J2), and id/field-keyed member renames.
+  *
+  * The edits are driver-held rows, and each is applied as literal column
+  * expressions, never as a join against a local frame of edits: every
+  * distinct local frame in a broadcast join is one more Spark job. Vote
+  * renames and member renames are single projections of their table
+  * (plus the roll-stamp join for ranged renames); year edits pull the few
+  * (service ⋈ members) rows the edits name in one action, decide on the
+  * driver, and filter the service by the result.
   */
 object ApplyEdits {
 
@@ -99,31 +107,34 @@ object ApplyEdits {
 
   /** Apply voter-name renames (apply_edits.py:57-77). Simple renames apply
     * everywhere; time-ranged renames only where the vote's roll stamp is
-    * strictly inside (start, stop).
+    * strictly inside (start, stop), and win over a simple rename of the
+    * same name. The renames are the YAML's `Votes` map, one per voter name:
+    * they go into the plan as a literal map and a `when` chain, so the only
+    * join left is the roll-stamp lookup, made when a ranged rename needs it.
     */
   def applyVoteRenames(votes: DataFrame, rollStamps: DataFrame,
                        renames: Seq[VoteRename]): DataFrame = {
-    val spark = votes.sparkSession
-    import spark.implicits._
     if (renames.isEmpty) return votes
+    val (simple, ranged) = renames.partition(_.start.isEmpty)
 
-    val simple = renames.filter(_.start.isEmpty)
-      .map(r => (r.before, r.after)).toDF("_before", "_after_simple")
-    val ranged = renames.filter(_.start.isDefined)
-      .map(r => (r.before, r.after, r.start.get, r.stop.get))
-      .toDF("_before_r", "_after_ranged", "_start", "_stop")
+    val name = votes("name")
+    // a null key is no map key, and matches no name in any case
+    val simpleMap = simple.filter(_.before != null).map(r => r.before -> r.after).toMap
+    val simpleAfter =
+      if (simpleMap.isEmpty) lit(null).cast("string")
+      else element_at(typedLit(simpleMap), name)
+    if (ranged.isEmpty) return votes.withColumn("name", coalesce(simpleAfter, name))
 
+    val stamp = col("_stamp")
+    val rangedAfter = ranged.foldRight(lit(null).cast("string")) { (r, otherwise) =>
+      when(name === r.before && stamp > lit(r.start.get).cast("timestamp") &&
+        stamp < lit(r.stop.get).cast("timestamp"), r.after).otherwise(otherwise)
+    }
     votes
-      .join(broadcast(simple), votes("name") === col("_before"), "left")
       .join(rollStamps.select(col("roll_id").as("_rs_roll"), col("stamp").as("_stamp")),
         votes("roll_id") === col("_rs_roll"), "left")
-      .join(broadcast(ranged),
-        votes("name") === col("_before_r") &&
-          col("_stamp") > col("_start").cast("timestamp") &&
-          col("_stamp") < col("_stop").cast("timestamp"), "left")
-      .withColumn("name", coalesce(col("_after_ranged"), col("_after_simple"), col("name")))
-      .drop("_before", "_after_simple", "_before_r", "_after_ranged",
-        "_start", "_stop", "_rs_roll", "_stamp")
+      .withColumn("name", coalesce(rangedAfter, simpleAfter, name))
+      .drop("_rs_roll", "_stamp")
   }
 
   /** Apply per-year service edits (apply_edits.py:11-56).
@@ -131,61 +142,67 @@ object ApplyEdits {
     * [+first], chamber, year) → drop it. Add: when none matches but
     * exactly one neighbor-year (year ± 1) row exists for (last, chamber)
     * → copy it into the target year.
+    *
+    * The edits are a handful of driver-held rows, so the decisions are
+    * made on the driver: one action pulls the (service ⋈ members) rows
+    * whose last name an edit names, the counting happens here, and the
+    * result is the service filtered by a literal predicate plus the added
+    * rows as a local frame — no join against the edits in the plan.
     */
   def applyYearEdits(service: DataFrame, members: DataFrame,
                      edits: Seq[YearEdit]): DataFrame = {
-    val spark = service.sparkSession
-    import spark.implicits._
     if (edits.isEmpty) return service
 
-    // e_first uses a '' sentinel (not NULL): the add-path anti join below
-    // compares on it, and NULL keys never match in joins. e_raw is the
-    // unsplit YAML key: the reference's neighbor-year query filters
+    // the unsplit YAML key: the reference's neighbor-year query filters
     // last == <raw key> (apply_edits.py:37), so a two-word key like
     // "John Smith" matches nothing there — reproduce that, don't "fix" it
-    // into a split-name match the reference never makes.
-    def toDf(es: Seq[YearEdit]) = broadcast(es
-      .map(e => (e.year, e.chamber, e.first.getOrElse(""), e.last,
-        e.first.map(f => s"$f ${e.last}").getOrElse(e.last)))
-      .toDF("e_year", "e_chamber", "e_first", "e_last", "e_raw"))
-    // intent comes from the YAML value (apply_edits.py:26): null → remove,
-    // non-null → add. Each path sees only its own edits.
-    val removeEdits = toDf(edits.filter(_.remove))
-    val addEdits = toDf(edits.filterNot(_.remove))
-
+    // into a split-name match the reference never makes
+    def raw(e: YearEdit) = e.first.map(f => s"$f ${e.last}").getOrElse(e.last)
     val sm = service.as("sv")
-      .join(members.as("m"), col("sv.member_id") === col("m.id"), "left")
+      .join(members.as("m"), col("sv.member_id") === col("m.id"))
+      .filter(col("m.last").isin(edits.flatMap(e => Seq(e.last, raw(e))).distinct: _*))
+      .select(col("sv.year"), col("sv.chamber"), col("m.id"), col("m.first"),
+        col("m.last"), col("sv.district"), col("sv.party"))
+    val rows = sm.collect().toSeq
+    def year(r: Row) = if (r.isNullAt(0)) None else Some(r.getInt(0))
+    def chamber(r: Row) = if (r.isNullAt(1)) None else Some(r.getInt(1))
+    def last(r: Row, l: String) = l != null && l == r.getString(4)
 
-    def exactMatches(editDf: DataFrame) = sm.join(editDf,
-        col("m.last") === col("e_last") && col("sv.chamber") === col("e_chamber") &&
-          col("sv.year") === col("e_year") &&
-          (col("e_first") === "" || col("m.first") === col("e_first")))
-      .groupBy("e_year", "e_chamber", "e_first", "e_last")
-      .agg(count(lit(1)).as("_n"), min(col("m.id")).as("_mid"))
+    // edits with the same (year, chamber, first, last) key count together,
+    // an empty first matching any first; intent comes from the YAML value
+    // (apply_edits.py:26): null → remove, non-null → add, and each path
+    // sees only its own edits
+    def key(e: YearEdit) = (e.year, e.chamber, e.first.getOrElse(""), e.last)
+    def exact(e: YearEdit) = rows.filter(r => last(r, e.last) &&
+      chamber(r).contains(e.chamber) && year(r).contains(e.year) &&
+      (e.first.forall(_.isEmpty) || e.first.contains(r.getString(3))))
+    val (removeEdits, addEdits) = edits.partition(_.remove)
 
     // removals: exactly one match → delete that service row
-    val removals = exactMatches(removeEdits).filter(col("_n") === 1)
-      .select(col("e_year").as("r_year"), col("e_chamber").as("r_chamber"),
-        col("_mid").as("r_mid"))
-    val afterRemove = service.join(broadcast(removals),
-      col("year") === col("r_year") && col("chamber") === col("r_chamber") &&
-        col("member_id") === col("r_mid"), "left_anti")
+    val removals = removeEdits.groupBy(key).values.toSeq.flatMap { es =>
+      val hits = exact(es.head)
+      if (es.size * hits.size == 1) hits.map(r => (es.head.year, es.head.chamber, r.get(2)))
+      else Nil
+    }
+    val removed = removals.map { case (y, c, id) =>
+      col("year") === y && col("chamber") === c && col("member_id") === lit(id)
+    }.foldLeft(lit(false))(_ || _)
+    val afterRemove = service.filter(!coalesce(removed, lit(false)))
 
     // additions: add-intent edits with zero matches → pull from year ± 1
     // when unambiguous
-    val toAdd = addEdits.join(exactMatches(addEdits),
-        Seq("e_year", "e_chamber", "e_first", "e_last"), "left_anti")
-    val neighbor = sm.join(toAdd,
-        col("m.last") === col("e_raw") && col("sv.chamber") === col("e_chamber") &&
-          (col("sv.year") === col("e_year") - 1 || col("sv.year") === col("e_year") + 1))
-      .groupBy("e_year", "e_chamber", "e_last")
-      .agg(count(lit(1)).as("_n"), min(col("m.id")).as("member_id"),
-        min(col("sv.district")).as("district"), min(col("sv.party")).as("party"))
-      .filter(col("_n") === 1)
-      .select(col("member_id"), col("e_year").as("year"),
-        col("e_chamber").as("chamber"), col("district"), col("party"))
-
-    afterRemove.unionByName(neighbor.select(afterRemove.columns.map(col): _*))
+    val toAdd = addEdits.groupBy(key).values.toSeq.filter(es => exact(es.head).isEmpty).flatten
+    val added = toAdd.groupBy(e => (e.year, e.chamber, e.last)).toSeq.flatMap {
+      case ((y, c, _), es) =>
+        val hits = es.flatMap(e => rows.filter(r => last(r, raw(e)) &&
+          chamber(r).contains(c) && (year(r).contains(y - 1) || year(r).contains(y + 1))))
+        if (hits.size == 1) hits.map(r => Row(r.get(2), y, c, r.get(5), r.get(6))) else Nil
+    }
+    val addedSchema = StructType(Seq(
+      StructField("member_id", sm.schema("id").dataType), StructField("year", IntegerType),
+      StructField("chamber", IntegerType), sm.schema("district"), sm.schema("party")))
+    afterRemove.unionByName(service.sparkSession.createDataFrame(added.asJava, addedSchema)
+      .select(afterRemove.columns.map(col): _*))
   }
 
   /** Apply member renames (apply_edits.py:78-96). */

@@ -1,75 +1,80 @@
 package graft.votes
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Duplicate-member detection and merge (reference: find_duplicates.py).
-  * Candidates come from two blocked self-joins — same (year, chamber,
-  * lower(last)) service block and same non-null dob — gated by the
-  * `is_same_name` kernel and the no-conflicting-archive-ids rule
-  * (find_duplicates.py:11-15). Blocking bounds the pairwise expansion;
-  * the merge-group construction runs on the driver over the (tiny)
-  * candidate pair set, like the reference.
+  * Candidates come from two blocks — same (year, chamber, lower(last))
+  * service block and same non-null dob — gated by the `is_same_name`
+  * kernel and the no-conflicting-archive-ids rule (find_duplicates.py:11-15).
+  * Blocking bounds the pairwise expansion.
+  *
+  * What runs where: [[candidatePairs]] pulls the members and their
+  * service rows (dimension-sized) in one action and pairs them on the
+  * driver, block by block, like the reference; [[mergeGroups]] pulls the
+  * (tiny) candidate pair set and builds the merge groups on the driver;
+  * [[applyMerges]] applies those driver-held merges as literal
+  * expressions, with one small action for the absorbed rows' archive ids
+  * and one shuffle for the service dedup.
   */
 object FindDuplicates {
 
   private val idFields = Seq("house_archive_id", "house_current_id",
     "senate_archive_id", "senate_current_id")
 
-  private def named(df: DataFrame, p: String): DataFrame =
-    df.columns.foldLeft(df)((d, c) => d.withColumnRenamed(c, p + c))
-
-  private def sameNameHit(p1: String, p2: String, requireSuffix: Boolean): Column =
-    NameUdfs.isSameName(
-      col(p1 + "first"), col(p1 + "middle"), col(p1 + "last"), col(p1 + "suffix"),
-      col(p2 + "first"), col(p2 + "middle"), col(p2 + "last"), col(p2 + "suffix"),
-      lit(requireSuffix))
-
-  private def mergable(p1: String, p2: String): Column =
-    idFields.map(f => col(p1 + f).isNull || col(p2 + f).isNull).reduce(_ && _)
-
-  /** Candidate merge pairs: (id1 < id2, merged name struct, block kind). */
+  /** Candidate merge pairs: (id1 < id2, merged name struct, block kind).
+    * Members and their service rows are dimension-sized, so one action
+    * pulls them and the pairs are formed on the driver within each block,
+    * like the reference; the result is a local frame.
+    */
   def candidatePairs(members: DataFrame, service: DataFrame): DataFrame = {
-    val m1 = named(members, "a_")
-    val m2 = named(members, "b_")
+    val person = (Seq("id", "first", "middle", "last", "suffix") ++ idFields :+ "dob").map(col)
+    val rows = members.select(struct(person: _*).as("_m"))
+      .unionByName(service.select(struct(col("member_id"), col("year"), col("chamber")).as("_s")),
+        allowMissingColumns = true)
+      .collect()
+    // the join keys of the reference's queries: a null never matches
+    val people = rows.filterNot(_.isNullAt(0)).map(_.getStruct(0)).filterNot(_.isNullAt(0))
+    val byId = people.groupBy(_.getLong(0))
 
     // block 1: overlapping service year+chamber, same lower(last)
-    // (find_duplicates.py:47-59); require_suffix=true
-    val svc = service.select(col("member_id"), col("year"), col("chamber"))
-    val blocked = svc.as("s1")
-      .join(members.select(col("id"), lower(col("last")).as("_last")).as("l1"),
-        col("s1.member_id") === col("l1.id"))
-      .select(col("year"), col("chamber"), col("_last"), col("id"))
-    val svcPairs = blocked.as("x")
-      .join(blocked.as("y"), Seq("year", "chamber", "_last"))
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
-      .distinct()
-      .join(m1, "a_id").join(m2, "b_id")
-      .withColumn("_merged", sameNameHit("a_", "b_", requireSuffix = true))
-      .withColumn("kind", lit("service"))
+    // (find_duplicates.py:47-59); block 2: identical non-null dob
+    // (find_duplicates.py:60-66)
+    val svcBlocks: Seq[((String, Any), Row)] = rows.toSeq.filterNot(_.isNullAt(1))
+      .map(_.getStruct(1)).filterNot(s => s.isNullAt(0) || s.isNullAt(1) || s.isNullAt(2))
+      .flatMap(s => byId.getOrElse(s.getLong(0), Array.empty[Row]).filterNot(_.isNullAt(3))
+        .map(m => ("service", (s.get(1), s.get(2), m.getString(3).toLowerCase)) -> m))
+    val dobBlocks: Seq[((String, Any), Row)] =
+      people.toSeq.filterNot(_.isNullAt(9)).map(m => ("dob", m.get(9)) -> m)
+    val pairs: Seq[((Long, Long, String), (Row, Row))] = for {
+      ((kind, _), block) <- (svcBlocks ++ dobBlocks).groupBy(_._1).toSeq
+      x <- block.map(_._2)
+      y <- block.map(_._2) if x.getLong(0) < y.getLong(0)
+    } yield (x.getLong(0), y.getLong(0), kind) -> (x, y)
 
-    // block 2: identical non-null dob (find_duplicates.py:60-66);
-    // require_suffix=false
-    val dobPairs = m1.filter(col("a_dob").isNotNull).as("x")
-      .join(m2.filter(col("b_dob").isNotNull).as("y"),
-        col("a_dob") === col("b_dob") && col("a_id") < col("b_id"))
-      .withColumn("_merged", sameNameHit("a_", "b_", requireSuffix = false))
-      .withColumn("kind", lit("dob"))
-
-    svcPairs.unionByName(dobPairs)
-      .filter(col("_merged").isNotNull && mergable("a_", "b_"))
-      .select(col("a_id").as("id1"), col("b_id").as("id2"), col("kind"),
-        col("_merged._1").as("m_first"), col("_merged._2").as("m_middle"),
-        col("_merged._3").as("m_last"), col("_merged._4").as("m_suffix"))
-      // a pair hit by BOTH blocks must resolve deterministically: the dob
-      // block's merged name wins (the reference computes service pairs
-      // first and lets dob pairs overwrite, find_duplicates.py:60-66)
-      .withColumn("_rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("id1", "id2")
-          .orderBy(when(col("kind") === "dob", 0).otherwise(1))))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
+    // gated by the name kernel (require_suffix only in the service block)
+    // and by no conflicting archive ids (find_duplicates.py:11-15)
+    def part(r: Row, i: Int) = if (r.isNullAt(i)) null else r.getString(i)
+    val hits = pairs.toMap.toSeq.flatMap { case ((id1, id2, kind), (x, y)) =>
+      val merged = NameUdfs.mergedName(part(x, 1), part(x, 2), part(x, 3), part(x, 4),
+        part(y, 1), part(y, 2), part(y, 3), part(y, 4), requireSuffix = kind == "service")
+      val mergable = (5 to 8).forall(i => x.isNullAt(i) || y.isNullAt(i))
+      if (merged == null || !mergable) None
+      else Some(Row(id1, id2, kind, merged._1, merged._2, merged._3, merged._4))
+    }
+    // one row per pair: a pair hit by BOTH blocks must resolve
+    // deterministically: the dob block's merged name wins (the reference
+    // computes service pairs first and lets dob pairs overwrite,
+    // find_duplicates.py:60-66)
+    val best = hits.groupBy(r => (r.getLong(0), r.getLong(1))).values
+      .map(rs => rs.find(_.getString(2) == "dob").getOrElse(rs.head)).toSeq
+    val schema = StructType(Seq(StructField("id1", members.schema("id").dataType),
+      StructField("id2", members.schema("id").dataType)) ++
+      Seq("kind", "m_first", "m_middle", "m_last", "m_suffix").map(StructField(_, StringType)))
+    members.sparkSession.createDataFrame(best.asJava, schema)
   }
 
   final case class Merge(survivor: Long, absorbed: Seq[Long],
@@ -125,48 +130,45 @@ object FindDuplicates {
     * are deleted; absorbed service rows are repointed to the survivor
     * unless an identical (chamber, year, district, party) row already
     * exists, then deduplicated.
+    *
+    * The merges are driver-held, so the old → new id mapping and the
+    * merged names go into the plan as literal maps. The absorbed rows'
+    * archive ids come back in one small action (a handful of rows) and go
+    * in the same way; the service dedup is the one shuffle left.
     */
   def applyMerges(members: DataFrame, service: DataFrame, merges: Seq[Merge]): Applied = {
     if (merges.isEmpty) return Applied(members, service)
-    val spark = members.sparkSession
-    import spark.implicits._
 
-    val mapping = merges.flatMap(m => m.absorbed.map(a => (a, m.survivor)))
-      .toDF("old_id", "new_id")
-    val nameUpd = merges.map(m => (m.survivor,
-      m.mergedName.first, m.mergedName.middle, m.mergedName.last, m.mergedName.suffix))
-      .toDF("_uid", "_first", "_middle", "_last", "_suffix")
+    val newId = typedLit(merges.flatMap(m => m.absorbed.map(_ -> m.survivor)).toMap)
+    val absorbed = element_at(newId, col("id")).isNotNull
 
-    // ids absorbed into each survivor, for archive-id inheritance
-    val absorbedIds = members.join(mapping, col("id") === col("old_id"))
-      .groupBy("new_id")
-      .agg(
-        idFields.map(f => max(col(f)).as("_abs_" + f)).head,
-        idFields.map(f => max(col(f)).as("_abs_" + f)).tail: _*)
+    // the merged name's non-empty parts replace the survivor's
+    val names = Seq[(String, Name => String)]("first" -> (_.first),
+      "middle" -> (_.middle), "last" -> (_.last), "suffix" -> (_.suffix))
+    val renamed = names.foldLeft(members.filter(!absorbed)) { case (d, (c, part)) =>
+      val byId = merges.map(m => m.survivor -> part(m.mergedName))
+        .filter(p => p._2 != null && p._2.nonEmpty).toMap
+      if (byId.isEmpty) d
+      else d.withColumn(c, coalesce(element_at(typedLit(byId), col("id")), col(c)))
+    }
 
-    val survivors = members
-      .join(mapping, col("id") === col("old_id"), "left_anti")
-      .join(nameUpd, col("id") === col("_uid"), "left")
-      .join(absorbedIds, col("id") === col("new_id"), "left")
-    val renamed = idFields.foldLeft(
-      survivors
-        .withColumn("first", when(col("_uid").isNotNull && col("_first") =!= "",
-          col("_first")).otherwise(col("first")))
-        .withColumn("middle", when(col("_uid").isNotNull && col("_middle") =!= "",
-          col("_middle")).otherwise(col("middle")))
-        .withColumn("last", when(col("_uid").isNotNull && col("_last") =!= "",
-          col("_last")).otherwise(col("last")))
-        .withColumn("suffix", when(col("_uid").isNotNull && col("_suffix") =!= "",
-          col("_suffix")).otherwise(col("suffix")))
-    )((d, f) => d.withColumn(f, coalesce(col(f), col("_abs_" + f))))
-      .select(members.columns.map(col): _*)
+    // archive-id inheritance: a survivor's missing id is the largest of
+    // that field over its absorbed rows, which one small action pulls
+    val absorbedRows = members.filter(absorbed)
+      .select(element_at(newId, col("id")) +: idFields.map(f => col(f).cast(LongType)): _*)
+      .collect().toSeq
+    val survivors = idFields.zipWithIndex.foldLeft(renamed) { case (d, (f, i)) =>
+      val byId = absorbedRows.filterNot(_.isNullAt(i + 1)).groupBy(_.getLong(0))
+        .map { case (survivor, rs) => survivor -> rs.map(_.getLong(i + 1)).max }
+      if (byId.isEmpty) d
+      else d.withColumn(f, coalesce(col(f),
+        element_at(typedLit(byId), col("id")).cast(members.schema(f).dataType)))
+    }
 
     val newService = service
-      .join(mapping, col("member_id") === col("old_id"), "left")
-      .withColumn("member_id", coalesce(col("new_id"), col("member_id")))
-      .drop("old_id", "new_id")
+      .withColumn("member_id", coalesce(element_at(newId, col("member_id")), col("member_id")))
       .dropDuplicates("member_id", "chamber", "year", "district", "party")
 
-    Applied(renamed, newService)
+    Applied(survivors, newService)
   }
 }

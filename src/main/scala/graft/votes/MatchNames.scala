@@ -1,7 +1,6 @@
 package graft.votes
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -38,11 +37,12 @@ object MatchNames {
   /** Hard cap on pass-2 residue rows pulled to the driver; see [[run]]. */
   val DefaultMaxResidue = 100000
 
-  /** Pass 1, the blocked fuzzy join (match_names.py:13-47), unmaterialized:
-    * (year, chamber, name, member_id, method) for every voter name that
-    * resolves to exactly one distinct roster name tuple of its block.
+  /** Pass 1, the blocked fuzzy join (match_names.py:13-47), unmaterialized
+    * and before its uniqueness gate: every voter name (year, chamber,
+    * name), with the smallest member_id among its hits and `_n_hits`, the
+    * number of distinct roster name tuples of its block that it hits.
     */
-  private[votes] def pass1(voterNames: DataFrame, roster: DataFrame): DataFrame = {
+  private def scored(voterNames: DataFrame, roster: DataFrame): DataFrame = {
     val probes = voterNames
       .withColumn("_p", parseProbe(col("name")))
       .withColumn("_block", lower(col("_p._3")))
@@ -51,12 +51,9 @@ object MatchNames {
     // (match_names.py:106), so block cardinality and the uniqueness gate
     // count DISTINCT name tuples, not roster rows — duplicate member
     // records with identical names must not block a match
-    val wBlock = Window.partitionBy("year", "chamber", "_block")
-    val nameTuple = struct(col("first"), col("middle"), col("last"), col("suffix"))
     val rosterB = roster
       .withColumn("_block", lower(coalesce(col("last"), lit(""))))
-      .withColumn("_ntuple", nameTuple)
-      .withColumn("_n_last", size(collect_set(col("_ntuple")).over(wBlock)))
+      .withColumn("_ntuple", struct(col("first"), col("middle"), col("last"), col("suffix")))
 
     // normalized probe first: "J." → "J" (match_names.py:36-37), applied
     // only on the multi-candidate branch of get_match
@@ -64,32 +61,54 @@ object MatchNames {
       substring(col("_p._1"), 2, 1) === ".", substring(col("_p._1"), 1, 1))
       .otherwise(col("_p._1"))
 
-    val joined = probes.join(rosterB, Seq("year", "chamber", "_block"))
+    // a left join keeps the voter names no roster row shares a block with;
+    // their one row has no name tuple and never hits. Each voter name meets
+    // every roster row of its block, so one aggregation counts the block's
+    // distinct name tuples and the hits of both branches of get_match. The
+    // roster is dimension-sized: broadcast it, since a size estimate of a
+    // joined roster (the product of its inputs) would plan a shuffle join
+    val joined = probes.join(broadcast(rosterB), Seq("year", "chamber", "_block"), "left")
       .withColumn("_norm_first", normFirst)
-      .withColumn("_hit_single", NameUdfs.isSameName(
+      .withColumn("_single", when(NameUdfs.isSameName(
         col("_p._1"), col("_p._2"), col("_p._3"), col("_p._4"),
         col("first"), col("middle"), col("last"), col("suffix"),
-        lit(false)).isNotNull)
-      .withColumn("_hit_multi", col("_p._1") =!= "" && NameUdfs.isSameName(
+        lit(false)).isNotNull, col("_ntuple")))
+      .withColumn("_multi", when(col("_p._1") =!= "" && NameUdfs.isSameName(
         col("_norm_first"), col("_p._2"), col("_p._3"), col("_p._4"),
         col("first"), col("middle"), col("last"), col("suffix"),
-        lit(false)).isNotNull)
-      .withColumn("_hit",
-        when(col("_n_last") === 1, col("_hit_single")).otherwise(col("_hit_multi")))
+        lit(false)).isNotNull, col("_ntuple")))
 
+    // size(collect_set) counts distinct tuples in one aggregation, where
+    // countDistinct would plan a second shuffle
+    val single = size(collect_set(col("_ntuple"))) === 1
     joined
       .groupBy("year", "chamber", "name")
-      .agg(min(when(col("_hit"), col("member_id"))).as("member_id"),
-        countDistinct(when(col("_hit"), col("_ntuple"))).as("_n_hits"))
-      .filter(col("_n_hits") === 1)
-      .select(col("year"), col("chamber"), col("name"), col("member_id"),
-        lit("fuzzy").as("method"))
+      .agg(single.as("_one"),
+        min(when(col("_single").isNotNull, col("member_id"))).as("_single_id"),
+        size(collect_set(col("_single"))).as("_n_single"),
+        min(when(col("_multi").isNotNull, col("member_id"))).as("_multi_id"),
+        size(collect_set(col("_multi"))).as("_n_multi"))
+      .select(col("year"), col("chamber"), col("name"),
+        when(col("_one"), col("_single_id")).otherwise(col("_multi_id")).as("member_id"),
+        when(col("_one"), col("_n_single")).otherwise(col("_n_multi")).as("_n_hits"))
   }
 
-  /** Runs pass 1 once (one eager local checkpoint), pulls both residues to
-    * the driver in one action, runs pass 2 there, and builds the residue
-    * frames from the rows the driver holds, so no consumer of the
-    * [[Result]] re-runs the fuzzy join.
+  /** Pass 1's matches: (year, chamber, name, member_id, method) for every
+    * voter name that resolves to exactly one distinct roster name tuple of
+    * its block.
+    */
+  private[votes] def pass1(voterNames: DataFrame, roster: DataFrame): DataFrame =
+    scored(voterNames, roster).filter(col("_n_hits") === 1)
+      .select(col("year"), col("chamber"), col("name"), col("member_id"),
+        lit("fuzzy").as("method"))
+
+  /** Runs pass 1 once: one local checkpoint, a single partition,
+    * holds every scored voter name and every roster row. The matches are
+    * read from it, and both residues come back from it in one action that
+    * anti-joins the roster rows against the matches inside that partition,
+    * so no consumer of the [[Result]] re-runs the fuzzy join or re-plans the
+    * inputs, and no broadcast is needed. Pass 2 runs on the driver, and the
+    * residue frames are local frames built from the rows the driver holds.
     *
     * @param voterNames distinct voter names: (year, chamber, name)
     * @param roster     members serving: (year, chamber, member_id, first,
@@ -101,33 +120,52 @@ object MatchNames {
     */
   def run(spark: SparkSession, voterNames: DataFrame, roster: DataFrame,
           maxResidue: Int = DefaultMaxResidue): Result = {
-    val fuzzyMatches = pass1(voterNames, roster).localCheckpoint(true)
+    val voters = scored(voterNames, roster)
+    // roster rows keyed first, in the column order of an anti-join USING
+    // (year, chamber, member_id), plus the upper-cased last name pass 2 uses
+    val keys = Seq("year", "chamber", "member_id")
+    val rosterCols = (keys ++ roster.columns.filterNot(keys.contains)).map(col) :+
+      upper(coalesce(col("last"), lit(""))).as("_last_u")
+    // one partition: the residue pull below anti-joins the roster rows
+    // against the matches inside it. The checkpoint is lazy: that pull is
+    // the job that computes and stores it.
+    val state = voters.select(struct(voters.columns.map(col): _*).as("_v"))
+      .unionByName(roster.select(struct(rosterCols: _*).as("_r")), allowMissingColumns = true)
+      .coalesce(1)
+      .localCheckpoint(eager = false)
 
-    // ---- residue after pass 1
-    val missing1 = voterNames.join(fuzzyMatches, Seq("year", "chamber", "name"), "left_anti")
-    val unmatched1 = roster.join(
-      fuzzyMatches.select(col("year"), col("chamber"), col("member_id")),
-      Seq("year", "chamber", "member_id"), "left_anti")
+    val fuzzyMatches = state.filter(col("_v._n_hits") === 1)
+      .select(col("_v.year").as("year"), col("_v.chamber").as("chamber"),
+        col("_v.name").as("name"), col("_v.member_id").as("member_id"),
+        lit("fuzzy").as("method"))
 
     // ---- pass 2: substring fixed point on the driver (match_names.py:139-156).
-    // The residue is per-group tiny under the reference's data model, but a
-    // degraded pass 1 (e.g. a broken blocking key matching nothing) would
-    // make the pull unbounded — capping each side at cap+1 rows bounds
-    // driver memory and the require fails loudly with a diagnosis instead
-    // of OOMing. Both sides come back in one action, each as a struct
-    // column that is null on the other side's rows.
-    val residue = missing1.select(struct(missing1.columns.toSeq.map(col): _*).as("_v"))
-      .limit(maxResidue + 1)
-      .unionByName(unmatched1.select(struct(unmatched1.columns.toSeq.map(col) :+
-        upper(coalesce(col("last"), lit(""))).as("_last_u"): _*).as("_r"))
-        .limit(maxResidue + 1), allowMissingColumns = true)
-      .collect()
-    val missingRows = residue.filterNot(_.isNullAt(0)).map(_.getStruct(0))
+    // The residues are anti-joins against the matches: voter names on
+    // (year, chamber, name), roster rows on (year, chamber, member_id), a
+    // null key never matching. The residue is per-group tiny under the
+    // reference's data model, but a degraded pass 1 (e.g. a broken blocking
+    // key matching nothing) would make the pull unbounded — keeping at most
+    // maxResidue+1 rows of each side bounds driver memory and the require
+    // fails loudly with a diagnosis instead of OOMing.
+    val cap = maxResidue + 1
+    val residue = state.rdd.mapPartitions { rows =>
+      val (vs, rs) = rows.partition(!_.isNullAt(0))
+      val voterRows = vs.map(_.getStruct(0)).toVector
+      def key(r: Row, i: Int) =
+        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(i)) None
+        else Some((r.get(0), r.get(1), r.get(i)))
+      def unique(v: Row) = v.getInt(4) == 1
+      val claimed = voterRows.filter(unique).flatMap(key(_, 3)).toSet
+      val missing = voterRows.filterNot(v => unique(v) && key(v, 2).isDefined)
+      val unmatched = rs.map(_.getStruct(1)).filterNot(r => key(r, 2).exists(claimed))
+      missing.iterator.take(cap).map(Left(_)) ++ unmatched.take(cap).map(Right(_))
+    }.collect()
+    val missingRows = residue.collect { case Left(r) => r }
     require(missingRows.length <= maxResidue,
       s"MatchNames pass 2: unmatched voter-name residue exceeds $maxResidue rows — " +
         "pass 1 has degraded (check the blocking key / roster join); refusing " +
         "the driver-side fixed point")
-    val unmatchedRows = residue.filterNot(_.isNullAt(1)).map(_.getStruct(1))
+    val unmatchedRows = residue.collect { case Right(r) => r }
     require(unmatchedRows.length <= maxResidue,
       s"MatchNames pass 2: unmatched roster residue exceeds $maxResidue rows — " +
         "pass 1 has degraded (check the blocking key / roster join); refusing " +
@@ -152,7 +190,7 @@ object MatchNames {
         changed = false
         for (name <- missingNames.toList) {
           val hits = unmatchedByLast.toList.collect {
-            case (lastU, ids) if lastU.contains(name) => (lastU, ids)
+            case (lastU, ids) if name != null && lastU.contains(name) => (lastU, ids)
           }
           val ids = hits.flatMap(_._2)
           if (ids.length == 1) {
@@ -176,13 +214,15 @@ object MatchNames {
     val matchedNames = extraRows.map(r => (r.getInt(0), r.getInt(1), r.getString(2))).toSet
     val matchedIds = extraRows.map(r => (r.getInt(0), r.getInt(1), r.getLong(3))).toSet
     def local(rows: Seq[Row], schema: StructType) = spark.createDataFrame(rows.asJava, schema)
+    def fields(side: String) = state.schema(side).dataType.asInstanceOf[StructType]
     Result(
       fuzzyMatches.unionByName(local(extraRows, extraSchema)),
-      local(missingRows.toSeq.filterNot(r =>
-        matchedNames((r.getInt(0), r.getInt(1), r.getString(2)))), missing1.schema),
+      local(missingRows.toSeq
+        .filterNot(r => matchedNames((r.getInt(0), r.getInt(1), r.getString(2))))
+        .map(r => Row(r.get(0), r.get(1), r.get(2))), StructType(fields("_v").take(3))),
       local(unmatchedRows.toSeq
         .filterNot(r => matchedIds((r.getInt(0), r.getInt(1), r.getLong(2))))
-        .map(r => Row.fromSeq(r.toSeq.dropRight(1))), unmatched1.schema))
+        .map(r => Row.fromSeq(r.toSeq.dropRight(1))), StructType(fields("_r").dropRight(1))))
   }
 
   /** Per-group resolution stats with the reference's integer-floor percent
@@ -246,11 +286,12 @@ object MatchNames {
 
   /** Write-back (S9, match_names.py:168-188): fill votes.member_id from the
     * matches, but only for (year, chamber) groups that resolved completely
-    * (zero missing names AND zero unmatched members).
+    * (zero missing names AND zero unmatched members). The incomplete groups
+    * only gate an anti-join, so they need no dedup shuffle.
     */
   def applyMatches(votes: DataFrame, rollYearChamber: DataFrame, r: Result): DataFrame = {
     val incompleteGroups = r.missingNames.select("year", "chamber")
-      .union(r.unmatchedMembers.select("year", "chamber")).distinct()
+      .union(r.unmatchedMembers.select("year", "chamber"))
     val gated = r.matches.join(incompleteGroups, Seq("year", "chamber"), "left_anti")
       .select(col("year"), col("chamber"), col("name"),
         col("member_id").as("_new_member_id"))

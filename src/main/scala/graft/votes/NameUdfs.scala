@@ -20,14 +20,16 @@ object NameUdfs {
   private def toName(first: String, middle: String, last: String, suffix: String): Name =
     Name(n(first), n(middle), n(last), n(suffix))
 
-  /** (first, middle, last, suffix) ×2 + requireSuffix → merged name struct or NULL */
-  val isSameName: UserDefinedFunction = udf {
-    (f1: String, m1: String, l1: String, s1: String,
-     f2: String, m2: String, l2: String, s2: String, requireSuffix: Boolean) =>
-      Names.isSameName(toName(f1, m1, l1, s1), toName(f2, m2, l2, s2), requireSuffix)
-        .map(nm => (orNull(nm.first), orNull(nm.middle), orNull(nm.last), orNull(nm.suffix)))
-        .orNull
-  }
+  /** (first, middle, last, suffix) ×2 + requireSuffix → merged name or null */
+  def mergedName(f1: String, m1: String, l1: String, s1: String,
+                 f2: String, m2: String, l2: String, s2: String,
+                 requireSuffix: Boolean): (String, String, String, String) =
+    Names.isSameName(toName(f1, m1, l1, s1), toName(f2, m2, l2, s2), requireSuffix)
+      .map(nm => (orNull(nm.first), orNull(nm.middle), orNull(nm.last), orNull(nm.suffix)))
+      .orNull
+
+  /** [[mergedName]] as a column: a merged name struct or NULL */
+  val isSameName: UserDefinedFunction = udf(mergedName _)
 
   /** raw display string → (first, middle, last, suffix) struct */
   val parseName: UserDefinedFunction = udf { (raw: String) =>

@@ -406,17 +406,16 @@ object Dedup {
     // Cluster rows to their target partition dirs before the write: an
     // unshuffled dynamic-partition write has EVERY scan task open a
     // parquet writer for EVERY band_idx dir it meets — tasks × bands tiny
-    // files and a writer init each (r12 profile: 133 s of task time for a
-    // 4,500-doc build, almost all writer churn). r13: clustering is by
-    // dir ALONE (bounded salt when graft.index.filesPerDir > 1) so the
-    // files-per-dir bound holds by construction at any shuffle partition
-    // count — the r12 (band_idx, band_hash) key only looked clustered
-    // because AQE coalesced the toy-scale shuffle (see [[DirCluster]]).
-    DirCluster.clustered(
-        bandedHashes(minhashSignatures(docs, n, numHashes, idCol, textCol),
-            bands, rows, idCol)
-          .withColumn("ingest_batch", lit("base")),
-        salt = col("band_hash"), col("band_idx"))
+    // files and a writer init each (133 s of task time for a 4,500-doc
+    // build, almost all writer churn). The key is the dir ALONE, so each
+    // dir hashes to one shuffle partition and gets one file at any
+    // partition count. A (band_idx, band_hash) key would spread every
+    // dir over all partitions; it looks clustered only where AQE
+    // coalesces a small shuffle to a few tasks.
+    bandedHashes(minhashSignatures(docs, n, numHashes, idCol, textCol),
+        bands, rows, idCol)
+      .withColumn("ingest_batch", lit("base"))
+      .repartition(col("band_idx"))
       .write.mode("overwrite").partitionBy("ingest_batch", "band_idx")
       .parquet(s"$path/bands")
     val spark = docs.sparkSession
@@ -474,12 +473,11 @@ object Dedup {
     val n = meta.getAs[Long]("n").toInt
     val numHashes = meta.getAs[Long]("num_hashes").toInt
     val bands = meta.getAs[Long]("bands").toInt
-    // dir-clustered write (see buildLshIndex / [[DirCluster]])
-    DirCluster.clustered(
-        bandedHashes(minhashSignatures(docs, n, numHashes, idCol, textCol),
-            bands, numHashes / bands, idCol)
-          .withColumn("ingest_batch", lit(batchKey)),
-        salt = col("band_hash"), col("band_idx"))
+    // dir-clustered write (see buildLshIndex)
+    bandedHashes(minhashSignatures(docs, n, numHashes, idCol, textCol),
+        bands, numHashes / bands, idCol)
+      .withColumn("ingest_batch", lit(batchKey))
+      .repartition(col("band_idx"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("ingest_batch", "band_idx")
@@ -525,16 +523,16 @@ object Dedup {
     * and the tombstone log. Two jobs it does at once, same as the
     * e-family's retrain-as-compaction: retractions become physical, and
     * the small per-batch partition files a long append history
-    * accumulates collapse back into one partition set. The swap is the
-    * [[Similarity]] publish discipline — staged write, then rename-aside
-    * metadata FS calls — so a crash mid-build leaves the served index
-    * untouched, and no crash point DELETES data that is not already
-    * replaced: the worst window (between the two renames) leaves the
-    * complete old index under `bands_old_*` for a one-rename recovery (a
-    * coordinating caller should still treat compaction like any other
-    * maintenance window). Signatures are NOT recomputed — the rewrite
-    * moves rows, so probe results are bit-identical before/after
-    * (asserted in LlmSpec). Callers must quiesce a checkpointed ingest
+    * accumulates collapse back into one partition set. The swap is
+    * [[Similarity.swapIn]], the persisted indexes' one publish — staged
+    * write, then rename-aside metadata FS calls — so a crash mid-build
+    * leaves the served index untouched, and no crash point DELETES data
+    * that is not already replaced: the worst window (between the two
+    * renames) leaves the complete old index under `bands_old_*` for a
+    * one-rename recovery (a coordinating caller should still treat
+    * compaction like any other maintenance window). Signatures are NOT
+    * recomputed — the rewrite moves rows, so probe results are
+    * bit-identical before/after (asserted in LlmSpec). Callers must quiesce a checkpointed ingest
     * loop over the same index first: batch keys restart meaning
     * nothing after their buckets fold into `base`.
     */
@@ -551,30 +549,17 @@ object Dedup {
         "tombstoned; rebuild with buildLshIndex instead")
     val staging = s"$path/bands_staging_" +
       java.util.UUID.randomUUID().toString.take(8)
-    // dir-clustered write (see buildLshIndex / [[DirCluster]])
-    DirCluster.clustered(
-        live.drop("ingest_batch").withColumn("ingest_batch", lit("base")),
-        salt = col("band_hash"), col("band_idx"))
+    // dir-clustered write (see buildLshIndex)
+    live.drop("ingest_batch").withColumn("ingest_batch", lit("base"))
+      .repartition(col("band_idx"))
       .write.mode("overwrite").partitionBy("ingest_batch", "band_idx")
       .parquet(staging)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Rename-aside publish: the served bands are never DELETED before the
-    // replacement is in place. A crash between the two renames leaves the
-    // complete old index recoverable under bands_old_* (the former
-    // delete-then-rename lost it outright, and a failed rename left the
-    // index permanently gone with staging as an orphan); a failed second
-    // rename restores the old directory in place and throws.
-    val bands0 = new org.apache.hadoop.fs.Path(s"$path/bands")
-    val old = new org.apache.hadoop.fs.Path(
-      s"$path/bands_old_${java.util.UUID.randomUUID().toString.take(8)}")
-    if (!fs.rename(bands0, old))
-      throw new java.io.IOException(s"could not move aside $bands0 -> $old")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), bands0)) {
-      fs.rename(old, bands0) // restore the served index
-      throw new java.io.IOException(s"could not publish compacted index $staging")
-    }
-    fs.delete(old, true)
+    Similarity.swapIn(fs, new org.apache.hadoop.fs.Path(staging),
+      new org.apache.hadoop.fs.Path(s"$path/bands"),
+      Some(new org.apache.hadoop.fs.Path(
+        s"$path/bands_old_${java.util.UUID.randomUUID().toString.take(8)}")))
     // the compaction consumed the log (live rows exclude every logged
     // id); a crash before this delete re-subtracts a stale log against
     // the compacted bands — a no-op anti-join, never a lost retraction

@@ -22,15 +22,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** media record: id + opaque payload + typed metadata */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("mime", StringType, nullable = false),
-    StructField("data", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("n_bytes", LongType),
-      StructField("source", StringType))))))
-
   /** Build a media table from the documents table: payload = utf-8 bytes
     * of the text (a deterministic stand-in for real image/audio bytes).
     */

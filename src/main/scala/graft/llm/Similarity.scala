@@ -300,23 +300,18 @@ object Similarity {
   def mipsIvfIndexPath(dir: String, nlist: Int, iters: Int): String =
     indexPath(dir, s"mips-ivf|$nlist|$iters")
 
-  /** Persisted [[buildMipsIvf]] with the same stamp/staging/publish
-    * discipline as [[loadOrBuildIvf]]; its own path signature — the
-    * augmented-space lists are NOT interchangeable with e3's cosine-space
-    * index even at identical params.
+  /** Persisted [[buildMipsIvf]] through [[loadOrBuild]]; its own path
+    * signature — the augmented-space lists are NOT interchangeable with
+    * e3's cosine-space index even at identical params.
     */
   def loadOrBuildMipsIvf(spark: org.apache.spark.sql.SparkSession,
                          dir: String, corpus: DataFrame, nlist: Int = 16,
                          iters: Int = 2, idCol: String = "vec_id",
-                         vecCol: String = "embedding"): IvfIndex = {
-    val path = mipsIvfIndexPath(dir, nlist, iters)
-    val stamp = sourceStamp(spark, dir, corpus)
-    if (!indexFresh(spark, path, stamp))
-      publishIndex(spark, path, stamp) { staging =>
-        saveIvf(buildMipsIvf(corpus, nlist, iters, idCol, vecCol), staging)
-      }
-    loadIvf(spark, path)
-  }
+                         vecCol: String = "embedding"): IvfIndex =
+    loadOrBuild(spark, mipsIvfIndexPath(dir, nlist, iters),
+      sourceStamp(spark, dir, corpus))(
+      saveIvf(buildMipsIvf(corpus, nlist, iters, idCol, vecCol), _))(
+      loadIvf(spark, _))
 
   /** Query a [[buildMipsIvf]] index: augmented queries (`[q, 0]`) probe
     * the `nprobe` nearest centroids, the assignment scan prunes to those
@@ -571,32 +566,23 @@ object Similarity {
       nearestCentroid(c, "_cv", centroids, 1).select("cid", "_cl"))
   }
 
-  /** Same on-disk contract as [[saveIvfPq]]: tiny centroid table, the
-    * assignments partitioned by list label (probe-time partition
-    * pruning). Completeness is the stamp [[loadOrBuildIvf]] writes last
-    * (inside the staging dir, before the atomic publish). The meta table
-    * carries ONLY n_base — the trained-corpus size read by
-    * [[ivfDeltaFraction]]'s retrain trigger (the r4 meta was dropped as
-    * dead weight; this one has a reader) — counted from the just-written
-    * parquet's row-group metadata, one assignment row per vector.
+  /** Same on-disk layout as [[saveIvfPq]] minus the meta table: a tiny
+    * centroid table and the assignments partitioned by list label
+    * (probe-time partition pruning). Completeness is the stamp
+    * [[loadOrBuild]] writes last (inside the staging dir, before the
+    * atomic publish).
     */
   def saveIvf(index: IvfIndex, path: String): Unit = {
     index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
     // Cluster rows to their target list dirs before the write: an
     // unshuffled dynamic-partition write has every scan task open a
     // parquet writer per _cl dir it meets — tasks × nlist tiny files and
-    // a writer init each (the Dedup.buildLshIndex finding). r13: cluster
-    // by dir alone (bounded salt when graft.index.filesPerDir > 1) so
-    // the files-per-dir bound holds at any partition count — see
-    // [[DirCluster]].
-    DirCluster.clustered(index.lists, salt = col("cid"), col("_cl"))
+    // a writer init each (the Dedup.buildLshIndex finding). Keyed by the
+    // dir alone, each dir hashes to one shuffle partition, so it gets
+    // one file at any partition count.
+    index.lists.repartition(col("_cl"))
       .write.mode("overwrite").partitionBy("_cl")
       .parquet(s"$path/lists")
-    val spark = index.lists.sparkSession
-    import spark.implicits._
-    val nBase = spark.read.parquet(s"$path/lists").count()
-    Seq(nBase).toDF("n_base")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
   def loadIvf(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
@@ -612,132 +598,11 @@ object Similarity {
   def loadOrBuildIvf(spark: org.apache.spark.sql.SparkSession, dir: String,
                      corpus: DataFrame, nlist: Int = 16, iters: Int = 2,
                      idCol: String = "vec_id",
-                     vecCol: String = "embedding"): IvfIndex = {
-    val path = ivfIndexPath(dir, nlist, iters)
-    val stamp = sourceStamp(spark, dir, corpus)
-    if (!indexFresh(spark, path, stamp))
-      publishIndex(spark, path, stamp) { staging =>
-        saveIvf(buildIvf(corpus, nlist, iters, idCol, vecCol), staging)
-      }
-    loadIvf(spark, path)
-  }
-
-  /** IVF twin of [[encodeIvfPqDelta]]+[[appendIvfPqDelta]]: coarse-assign
-    * the delta to the EXISTING centroids and append the (cid, _cl)
-    * assignments into their list partitions — O(delta), no retrain, no
-    * vectors copied (the IVF index stores assignments only).
-    */
-  def appendIvfDelta(spark: org.apache.spark.sql.SparkSession, path: String,
-                     delta: DataFrame, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): IvfIndex = {
-    val index = loadIvf(spark, path)
-    val d = cleanVectors(delta, idCol, vecCol, "cid", "_cv")
-    // dir-clustered write (see saveIvf / [[DirCluster]])
-    DirCluster.clustered(
-        nearestCentroid(d, "_cv", index.centroids, 1).select("cid", "_cl"),
-        salt = col("cid"), col("_cl"))
-      .write.mode("append").partitionBy("_cl").parquet(s"$path/lists")
-    loadIvf(spark, path)
-  }
-
-  /** The complete meta table of a persisted IVF index, or None when it
-    * is absent/incomplete (no index yet, or a save killed mid-write) or
-    * predates the n_base field (an index persisted by an older release
-    * sharing the same tmpdir root). The IVF-PQ twin reads its meta with
-    * the writer's schema ([[readIvfPqMeta]]) and treats a null n_base
-    * the way this treats an absent column.
-    */
-  private def metaWithNBase(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Option[org.apache.spark.sql.Row] = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/meta/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) None
-    else {
-      val meta = spark.read.parquet(s"$path/meta")
-      if (!meta.columns.contains("n_base")) None else Some(meta.head())
-    }
-  }
-
-  /** (vectors at train, vectors now) for a persisted IVF index — one
-    * assignment row per vector; None when meta is absent or predates
-    * n_base. Twin of [[ivfpqCounts]].
-    */
-  private def ivfCounts(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Option[(Long, Long)] =
-    metaWithNBase(spark, path).flatMap { row =>
-      val nBase = row.getAs[Long]("n_base")
-      val nNow = spark.read.parquet(s"$path/lists").count()
-      if (nBase <= 0) None else Some((nBase, nNow))
-    }
-
-  /** Delta share of a maintained IVF index — 0 for pre-n_base indexes
-    * (they predate the trigger; the next rebuild stamps them).
-    */
-  def ivfDeltaFraction(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Double =
-    ivfCounts(spark, path)
-      .map { case (nBase, nNow) => (nNow - nBase).toDouble / nBase }
-      .getOrElse(0.0)
-
-  def ivfRetrainDue(spark: org.apache.spark.sql.SparkSession, path: String,
-                    maxDeltaFraction: Double = 0.2): Boolean =
-    ivfDeltaFraction(spark, path) > maxDeltaFraction
-
-  /** Maintenance entry point for the assignments-only index — same
-    * contract and crash/retry discipline as [[maintainIvfPq]] (append
-    * under the threshold, staged full retrain past it, `_pending_delta`
-    * marker bracketing the append so a retry can never double-apply).
-    * IVF drift is MILDER than IVF-PQ's (appended vectors are exactly
-    * scored at query time; only their LIST placement is frozen), so a
-    * caller may reasonably run a higher threshold here.
-    */
-  def maintainIvf(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  delta: DataFrame, grownCorpus: DataFrame,
-                  nlist: Int = 16, iters: Int = 2,
-                  maxDeltaFraction: Double = 0.2,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): IvfIndex = {
-    val path = ivfIndexPath(dir, nlist, iters)
-    val stamp = sourceStamp(spark, dir, grownCorpus)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (indexFresh(spark, path, stamp)
-        && !tombstoneCompactionDue(spark, path, maxDeltaFraction,
-          ivfCounts(spark, path), "lists")) {
-      // same guard as [[maintainIvfPq]]: freshness must not swallow a
-      // compaction-due tombstone share
-      fs.delete(pendingDeltaFlag(spark, path), false)
-      return loadIvf(spark, path)
-    }
-    // churn share incl. tombstones — same rationale as [[maintainIvfPq]];
-    // the retrain is the physical compaction that drops deleted ids
-    val deltaShare =
-      if (pendingDelta(spark, path)) Double.PositiveInfinity
-      else ivfCounts(spark, path)
-        .map { case (nBase, nNow) =>
-          (nNow + delta.count() + tombstoneCountIndexed(spark, path, "lists")
-            - nBase).toDouble / nBase
-        }
-        .getOrElse(Double.PositiveInfinity)
-    if (deltaShare > maxDeltaFraction) {
-      val liveCorpus = minusTombstones(grownCorpus, spark, path, idCol)
-      publishIndex(spark, path, stamp) { staging =>
-        saveIvf(buildIvf(liveCorpus, nlist, iters, idCol, vecCol), staging)
-      }
-      // the retrain CONSUMED the log (liveCorpus excluded every logged
-      // id); clear it only after the publish rename succeeded — a crash
-      // before this line leaves a stale log whose re-subtraction is a
-      // no-op (set-idempotent), never a lost retraction
-      TombstoneLog.drop(spark, tombstonePath(path))
-      loadIvf(spark, path)
-    } else {
-      fs.create(pendingDeltaFlag(spark, path), true).close()
-      val merged = appendIvfDelta(spark, path, delta, idCol, vecCol)
-      stampIndex(spark, path, stamp)
-      fs.delete(pendingDeltaFlag(spark, path), false)
-      merged
-    }
-  }
+                     vecCol: String = "embedding"): IvfIndex =
+    loadOrBuild(spark, ivfIndexPath(dir, nlist, iters),
+      sourceStamp(spark, dir, corpus))(
+      saveIvf(buildIvf(corpus, nlist, iters, idCol, vecCol), _))(
+      loadIvf(spark, _))
 
   /** Query a (possibly persisted) IVF index: probe the `nprobe` nearest
     * lists, PRUNE the assignment scan to those labels (bounded driver
@@ -918,21 +783,17 @@ object Similarity {
   def loadOrBuildPq(spark: org.apache.spark.sql.SparkSession, dir: String,
                     corpus: DataFrame, m: Int = 4, ksub: Int = 16,
                     iters: Int = 2, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): PqIndex = {
-    val path = pqIndexPath(dir, m, ksub, iters)
-    val stamp = sourceStamp(spark, dir, corpus)
-    if (!indexFresh(spark, path, stamp))
-      publishIndex(spark, path, stamp) { staging =>
-        savePq(buildPq(corpus, m, ksub, iters, idCol, vecCol), staging)
-      }
-    loadPq(spark, path)
-  }
+                    vecCol: String = "embedding"): PqIndex =
+    loadOrBuild(spark, pqIndexPath(dir, m, ksub, iters),
+      sourceStamp(spark, dir, corpus))(
+      savePq(buildPq(corpus, m, ksub, iters, idCol, vecCol), _))(
+      loadPq(spark, _))
 
   /** Query a (possibly persisted) PQ index: ADC-score the code scan
     * against the broadcast query↔codeword distance table, shortlist
-    * refine × k, re-rank exactly from the base table. Same candidate
-    * pipeline as the former inline form — the split changes where the
-    * codebook/codes live, not the scoring.
+    * refine × k, re-rank exactly from the base table. Whether the index
+    * was just built or loaded from disk changes where the codebook and
+    * codes live, not the scoring.
     */
   def pqQuery(index: PqIndex, corpus: DataFrame, queries: DataFrame, k: Int,
               refine: Int = 4, idCol: String = "vec_id",
@@ -1147,21 +1008,28 @@ object Similarity {
     s"$digest|$planHash"
   }
 
+  /** Serve the index at `path`, building and publishing it first when
+    * its stored stamp does not match `stamp` — or always, under
+    * `rebuild`. The IVF, MIPS-IVF, PQ and IVF-PQ entry points all run
+    * this, and `load` always reads the published directory, so the query
+    * path runs against the on-disk index (cold-loadable,
+    * process-restart-safe), never against in-process training lineage.
+    */
+  private def loadOrBuild[I](spark: org.apache.spark.sql.SparkSession,
+                             path: String, stamp: String,
+                             rebuild: Boolean = false)
+                            (save: String => Unit)(load: String => I): I = {
+    if (rebuild || !indexFresh(spark, path, stamp))
+      publishIndex(spark, path, stamp)(save)
+    load(path)
+  }
+
   /** Build into a staging directory next to `path`, stamp it, then
-    * publish by RENAME-ASIDE — path → path.old, staging → path, delete
-    * path.old — all metadata operations, so the window where a
-    * CONCURRENT reader (another JVM sharing the index root) could
-    * observe a half-written index shrinks from the whole train+write
-    * time to two FS calls. (True multi-writer coordination would need a
-    * lock service; a per-run GRAFT_INDEX_DIR sidesteps the question
-    * entirely.) Crash safety: a build killed mid-way leaves only an
-    * orphaned staging dir; the served index is never DELETED before its
-    * replacement exists — a crash between the two renames leaves the
-    * complete old index recoverable under `path.old-*` (a delete-first
-    * publish destroyed it outright), and a failed second rename restores
-    * the old directory in place. The tombstone log lives OUTSIDE the
-    * swapped directory ([[tombstonePath]]) precisely so no publish
-    * crash window can destroy the right-to-erasure record.
+    * publish it with [[swapIn]] (`path.old-*` is the aside directory).
+    * A build killed mid-way leaves only an orphaned staging dir. The
+    * tombstone log lives OUTSIDE the swapped directory
+    * ([[tombstonePath]]) precisely so no publish crash window can
+    * destroy the right-to-erasure record.
     */
   private def publishIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String, stamp: String)
@@ -1169,19 +1037,44 @@ object Similarity {
     val staging = s"$path.staging-${java.util.UUID.randomUUID().toString.take(8)}"
     build(staging)
     stampIndex(spark, staging, stamp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new org.apache.hadoop.fs.Path(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(
       s"$path.old-${java.util.UUID.randomUUID().toString.take(8)}")
-    val hadLive = fs.exists(live)
-    if (hadLive && !fs.rename(live, old))
-      throw new java.io.IOException(s"could not move aside $path -> $old")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), live)) {
-      if (hadLive) fs.rename(old, live) // restore the served index
-      throw new java.io.IOException(s"could not publish index $staging -> $path")
+    swapIn(fs, new org.apache.hadoop.fs.Path(staging), live,
+      Option.when(fs.exists(live))(old))
+  }
+
+  /** Swap a staged directory in by RENAME-ASIDE: `live` → `aside`,
+    * `staging` → `live`, delete `aside`. All three are metadata calls, so
+    * the window where a CONCURRENT reader (another JVM sharing the index
+    * root) could observe a half-written index shrinks from the whole
+    * build to two FS calls. (True multi-writer coordination would need a
+    * lock service; a per-run GRAFT_INDEX_DIR sidesteps the question
+    * entirely.) The served directory is never DELETED before its
+    * replacement is in place: a crash between the two renames leaves it
+    * complete under `aside`, and a second rename that fails — by
+    * returning false or by throwing — renames it back before the
+    * IOException propagates. `aside` is None when nothing is served yet.
+    * [[publishIndex]] and [[Dedup.compactLshIndex]] both swap here.
+    */
+  private[llm] def swapIn(fs: org.apache.hadoop.fs.FileSystem,
+                          staging: org.apache.hadoop.fs.Path,
+                          live: org.apache.hadoop.fs.Path,
+                          aside: Option[org.apache.hadoop.fs.Path]): Unit = {
+    aside.foreach { old =>
+      if (!fs.rename(live, old))
+        throw new java.io.IOException(s"could not move aside $live -> $old")
     }
-    if (hadLive) fs.delete(old, true)
+    try {
+      if (!fs.rename(staging, live))
+        throw new java.io.IOException(s"could not publish $staging -> $live")
+    } catch {
+      case e: java.io.IOException =>
+        aside.foreach(fs.rename(_, live)) // restore the served index
+        throw e
+    }
+    aside.foreach(fs.delete(_, true))
   }
 
   /** The stored stamp matches the current source — written LAST by
@@ -1229,8 +1122,8 @@ object Similarity {
     index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
     index.ucent.write.mode("overwrite").parquet(s"$path/ucent")
     index.codebook.write.mode("overwrite").parquet(s"$path/codebook")
-    // dir-clustered write (see saveIvf / [[DirCluster]])
-    DirCluster.clustered(index.codes, salt = col("cid"), col("_cl"))
+    // dir-clustered write (see saveIvf)
+    index.codes.repartition(col("_cl"))
       .write.mode("overwrite").partitionBy("_cl")
       .parquet(s"$path/codes")
     val spark = index.codes.sparkSession
@@ -1247,19 +1140,15 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** True iff a complete persisted index exists at `path` (the meta
-    * table is written last — see [[saveIvfPq]]). Probed through the
+  /** True iff a complete persisted IVF-PQ index exists at `path` (the
+    * meta table is written last — see [[saveIvfPq]]). Probed through the
     * Hadoop FileSystem of the path's scheme — the same filesystem the
     * writers use — so a non-local GRAFT_INDEX_DIR (hdfs://, s3a://)
     * works: a java.io.File probe would always say "missing" there and
     * silently retrain on every query.
     */
-  def ivfpqIndexExists(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Boolean =
-    indexComplete(spark, path)
-
-  private def indexComplete(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Boolean = {
+  private[llm] def indexComplete(spark: org.apache.spark.sql.SparkSession,
+                                 path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$path/meta/_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
@@ -1340,25 +1229,19 @@ object Similarity {
       m = meta.getAs[Int]("m"), sub = meta.getAs[Int]("sub"))
   }
 
-  /** Build-once / query-forever: serve the persisted index when a
-    * complete one exists for (dir, params); otherwise train, persist, and
-    * load back — so the query path ALWAYS runs against the on-disk
-    * index (cold-loadable, process-restart-safe), never against
-    * in-process training lineage.
+  /** Build-once / query-forever through [[loadOrBuild]]: serve the
+    * persisted index stamped for (dir, params, corpus); otherwise train,
+    * persist and load back.
     */
   def loadOrBuildIvfPq(spark: org.apache.spark.sql.SparkSession, dir: String,
                        corpus: DataFrame, nlist: Int = 16, m: Int = 4,
                        ksub: Int = 16, iters: Int = 2,
                        idCol: String = "vec_id",
-                       vecCol: String = "embedding"): IvfPqIndex = {
-    val path = ivfpqIndexPath(dir, nlist, m, ksub, iters)
-    val stamp = sourceStamp(spark, dir, corpus)
-    if (!indexFresh(spark, path, stamp))
-      publishIndex(spark, path, stamp) { staging =>
-        saveIvfPq(buildIvfPq(corpus, nlist, m, ksub, iters, idCol, vecCol), staging)
-      }
-    loadIvfPq(spark, path, corpus, idCol, vecCol)
-  }
+                       vecCol: String = "embedding"): IvfPqIndex =
+    loadOrBuild(spark, ivfpqIndexPath(dir, nlist, m, ksub, iters),
+      sourceStamp(spark, dir, corpus))(
+      saveIvfPq(buildIvfPq(corpus, nlist, m, ksub, iters, idCol, vecCol), _))(
+      loadIvfPq(spark, _, corpus, idCol, vecCol))
 
   /** Encode delta vectors against a FROZEN index model: coarse-assign to
     * the EXISTING centroids, residual against the existing unit
@@ -1407,9 +1290,8 @@ object Similarity {
   private def appendEncoded(spark: org.apache.spark.sql.SparkSession,
                             path: String, index: IvfPqIndex, delta: DataFrame,
                             idCol: String, vecCol: String): IvfPqIndex = {
-    // dir-clustered write (see saveIvf / [[DirCluster]])
-    DirCluster.clustered(encodeIvfPqDelta(index, delta, idCol, vecCol),
-        salt = col("cid"), col("_cl"))
+    // dir-clustered write (see saveIvf)
+    encodeIvfPqDelta(index, delta, idCol, vecCol).repartition(col("_cl"))
       .write.mode("append").partitionBy("_cl").parquet(s"$path/codes")
     index.copy(codes = readCodes(spark, path, index.exact.schema("cid").dataType))
   }
@@ -1488,19 +1370,20 @@ object Similarity {
     */
   private def tombstonePath(path: String): String = s"$path.tombstones"
 
-  /** Logical DELETE for a persisted vector index (IVF and IVF-PQ share
-    * the layout): append the ids to the sidecar log. The index tables
-    * are untouched — a physical in-place delete would rewrite list
-    * partitions on every retraction, so retraction is a metadata append
-    * and the read path subtracts ([[loadIvf]]/[[loadIvfPq]] anti-join
-    * the tombstone set before any candidate can form). Idempotent under
-    * retry: duplicate appends collapse in the read-side distinct, and a
-    * crashed append commits no rows. Deleted ids stay dead until the
-    * next full retrain physically drops them ([[maintainIvfPq]] folds
-    * the tombstone share into its trigger, so heavy churn forces the
-    * compaction); re-using a deleted id for a NEW vector is outside the
-    * contract — ids are a permanent namespace, the same contract as the
-    * LSH index ([[Dedup.buildLshIndex]]).
+  /** Logical DELETE for a persisted vector index: append the ids to the
+    * sidecar log. The index tables are untouched — a physical in-place
+    * delete would rewrite list partitions on every retraction, so
+    * retraction is a metadata append and the read path subtracts
+    * ([[loadIvf]]/[[loadIvfPq]] anti-join the tombstone set before any
+    * candidate can form). Idempotent under retry: duplicate appends
+    * collapse in the read-side distinct, and a crashed append commits no
+    * rows. On an IVF-PQ index deleted ids stay dead until the next full
+    * retrain physically drops them ([[maintainIvfPq]] folds the tombstone
+    * share into its trigger, so heavy churn forces the compaction); an
+    * IVF index is never maintained, so its deletes stay logical.
+    * Re-using a deleted id for a NEW vector is outside the contract — ids
+    * are a permanent namespace, the same contract as the LSH index
+    * ([[Dedup.buildLshIndex]]).
     */
   def tombstoneIds(spark: org.apache.spark.sql.SparkSession, path: String,
                    ids: DataFrame, idCol: String = "vec_id"): Unit =
@@ -1515,37 +1398,36 @@ object Similarity {
     * retraction requests for ids never indexed (or re-requested after a
     * compaction already dropped them) would inflate nTombs and force
     * spurious full retrains on a healthy index, so the trigger counts
-    * only `tomb_id ∈ index ids` (semi-join against the id column of the
-    * caller's payload table — one columnar scan of that column, paid
-    * only when a log exists; the no-log common path stays job-free).
+    * only `tomb_id ∈ index ids` (semi-join against the codes table's id
+    * column — one columnar scan of that column, paid only when a log
+    * exists; the no-log common path stays job-free). The codes are read
+    * with their writer's schema, `cid` at `idType`, so the scan runs no
+    * schema-inference job first.
     * [[tombstoneCount]] stays the raw log length: specs assert append
     * idempotence with it, and callers asking "how many deletes were
     * requested" want the log, not the overlap. */
   private def tombstoneCountIndexed(spark: org.apache.spark.sql.SparkSession,
-                                    path: String, idsSubdir: String): Long =
+                                    path: String, idType: DataType): Long =
     TombstoneLog.read(spark, tombstonePath(path)) match {
       case None => 0L
       case Some(tb) =>
-        val indexed = spark.read.parquet(s"$path/$idsSubdir")
+        val indexed = spark.read.schema(IvfPqSchema.codes(idType))
+          .parquet(s"$path/codes")
           .select(col("cid").cast("string").as("tomb_id")).distinct()
         tb.join(indexed, Seq("tomb_id"), "left_semi").count()
     }
 
   /** Tombstone share alone crossed the churn threshold — the signal that
     * lets a maintain call on an otherwise-FRESH index still reach its
-    * compacting retrain (deletes never move the source stamp). Counts
-    * come by-name from the caller's index-kind reader so (a) the
-    * denominator can't drift between the two maintain paths and (b) the
-    * steady-state short-circuit with NO log on disk stays job-free —
-    * [[tombstoneCountIndexed]] answers 0 off one fs.exists, and the
-    * lists/codes jobs never run. `idsSubdir` names the caller's
-    * corpus-sized payload table (IVF `lists`, IVF-PQ `codes`) so only
-    * retractions that hit THIS index count toward its trigger. */
+    * compacting retrain (deletes never move the source stamp). `counts`
+    * is by-name so the steady-state short-circuit with NO log on disk
+    * stays job-free — [[tombstoneCountIndexed]] answers 0 off one
+    * fs.exists, and neither the meta nor the codes job runs. */
   private def tombstoneCompactionDue(spark: org.apache.spark.sql.SparkSession,
                                      path: String, maxDeltaFraction: Double,
                                      counts: => Option[(Long, Long)],
-                                     idsSubdir: String): Boolean = {
-    val nTombs = tombstoneCountIndexed(spark, path, idsSubdir)
+                                     idType: DataType): Boolean = {
+    val nTombs = tombstoneCountIndexed(spark, path, idType)
     nTombs > 0 && counts.exists { case (nBase, _) =>
       nTombs.toDouble / nBase > maxDeltaFraction
     }
@@ -1586,13 +1468,14 @@ object Similarity {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val complete = indexComplete(spark, path)
+    val idType = grownCorpus.schema(idCol).dataType
     // read at most once per call, and only for a complete index: the meta
     // row feeds both triggers' counts and the append path's load
     lazy val meta = readIvfPqMeta(spark, path)
     lazy val counts = ivfpqCounts(spark, path, meta)
     if (complete && indexFresh(spark, path, stamp)
         && !tombstoneCompactionDue(spark, path, maxDeltaFraction,
-          counts, "codes")) {
+          counts, idType)) {
       // this exact merge already completed (a retry after a crash between
       // stamp and marker-clear lands here — finish the cleanup). Deletes
       // don't move the source stamp, so the freshness short-circuit must
@@ -1605,14 +1488,14 @@ object Similarity {
     // index too (dead rows scanned on every probe, served corpus drifting
     // from the trained one), so deletes count toward the same trigger —
     // heavy retraction forces the retrain, which doubles as the physical
-    // compaction (the rebuild below excludes tombstoned ids and replaces
-    // the directory, tombstone log included).
+    // compaction (the rebuild below excludes tombstoned ids, replaces the
+    // directory and then clears the tombstone log).
     val deltaShare =
       if (!complete || pendingDelta(spark, path))
         Double.PositiveInfinity
       else counts
         .map { case (nBase, nNow) =>
-          (nNow + delta.count() + tombstoneCountIndexed(spark, path, "codes")
+          (nNow + delta.count() + tombstoneCountIndexed(spark, path, idType)
             - nBase).toDouble / nBase
         }
         .getOrElse(Double.PositiveInfinity)
@@ -1620,14 +1503,16 @@ object Similarity {
       // the tombstone log is a SIDECAR ([[tombstonePath]]) the publish
       // swap never touches; it is read lazily inside the staged build
       val liveCorpus = minusTombstones(grownCorpus, spark, path, idCol)
-      publishIndex(spark, path, stamp) { staging =>
-        saveIvfPq(buildIvfPq(liveCorpus, nlist, m, ksub, iters, idCol, vecCol),
-          staging)
+      loadOrBuild(spark, path, stamp, rebuild = true)(
+        saveIvfPq(buildIvfPq(liveCorpus, nlist, m, ksub, iters, idCol, vecCol), _)) {
+        p =>
+          // the retrain CONSUMED the log (liveCorpus excluded every logged
+          // id); it is cleared only after the publish rename succeeded — a
+          // crash before this line leaves a stale log whose re-subtraction
+          // is a no-op (set-idempotent), never a lost retraction
+          TombstoneLog.drop(spark, tombstonePath(p))
+          loadIvfPq(spark, p, grownCorpus, idCol, vecCol)
       }
-      // consumed by the rebuild — cleared only after the rename succeeded
-      // (a stale log re-subtracts as a no-op; see maintainIvf)
-      TombstoneLog.drop(spark, tombstonePath(path))
-      loadIvfPq(spark, path, grownCorpus, idCol, vecCol)
     } else {
       // marker BEFORE the append, stamp after, clear last — every crash
       // window either serves the completed merge or forces the retrain

@@ -33,8 +33,6 @@ object Chamber {
   def fromLetterCol(c: Column): Column =
     when(upper(substring(c, 1, 1)) === "H", HOUSE)
       .when(upper(substring(c, 1, 1)) === "S", SENATE)
-  def titleCol(c: Column): Column =
-    when(c === HOUSE, "House").when(c === SENATE, "Senate")
 }
 
 /** Vote enum: YEA=1 NAY=2 NO_VOTE=3 LEAVE=4 with bidirectional Y/N/X/E

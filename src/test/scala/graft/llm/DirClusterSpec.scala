@@ -3,13 +3,12 @@ package graft.llm
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Dir-clustered dynamic-partition index writes (r13, [[DirCluster]]):
-  * the files-per-dir bound must hold BY CONSTRUCTION — at any
-  * spark.sql.shuffle.partitions — not via AQE happening to coalesce a
-  * toy-scale shuffle (the r12 (dir, high-card-key) repartition only
-  * looked clustered for that reason). Asserted at 8 AND 32 partitions,
-  * for the LSH band layout and the IVF list layout, and for
-  * filesPerDir = 1 (default) and a salted bound > 1.
+/** Dir-clustered dynamic-partition index writes: each write is
+  * repartitioned by its target dir alone, so every dir gets exactly one
+  * file BY CONSTRUCTION — at any spark.sql.shuffle.partitions — not via
+  * AQE happening to coalesce a toy-scale shuffle (a (dir, high-card-key)
+  * repartition only looks clustered for that reason). Asserted at 8 AND
+  * 32 partitions, for the LSH band layout and the IVF list layout.
   */
 class DirClusterSpec extends SparkSpec {
 
@@ -60,32 +59,6 @@ class DirClusterSpec extends SparkSpec {
           s"list dirs exceed 1 file at $parts partitions: " +
             files.filter(_._2 > 1).take(5))
       }
-    }
-  }
-
-  test("filesPerDir > 1: salted bound holds and rows survive intact") {
-    withPartitions(32) {
-      val docs = graft.Tables.t(spark, dir, "documents").select("doc_id", "text")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dircluster_").toString
-      spark.conf.set(DirCluster.FilesPerDirConf, "3")
-      try {
-        Dedup.buildLshIndex(docs, tmp, n = 3, numHashes = 64, bands = 32)
-        val files = partFiles(s"$tmp/bands")
-        assert(files.nonEmpty && files.values.forall(_ <= 3),
-          s"band dirs exceed the filesPerDir=3 bound: ${files.filter(_._2 > 3).take(5)}")
-        // the layout knob must not change WHAT is stored: same bucket
-        // rows as a default-layout build over the same corpus
-        val tmp2 = java.nio.file.Files.createTempDirectory("graft_dircluster_").toString
-        spark.conf.set(DirCluster.FilesPerDirConf, "1")
-        Dedup.buildLshIndex(docs, tmp2, n = 3, numHashes = 64, bands = 32)
-        val a = spark.read.parquet(s"$tmp/bands")
-          .select("doc_id", "band_idx", "band_hash")
-          .collect().map(_.toSeq).toSet
-        val b = spark.read.parquet(s"$tmp2/bands")
-          .select("doc_id", "band_idx", "band_hash")
-          .collect().map(_.toSeq).toSet
-        assert(a === b, "filesPerDir changed the stored bucket rows")
-      } finally spark.conf.unset(DirCluster.FilesPerDirConf)
     }
   }
 }

@@ -97,51 +97,6 @@ class IvfPqDeltaSpec extends SparkSpec {
       "(frozen-model append is starving fresh vectors)")
   }
 
-  test("IVF twin: appended assignments serve the grown corpus at rebuilt recall") {
-    val base = emb.filter(col("vec_id") < 400)
-    val delta = emb.filter(col("vec_id") >= 400)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_delta_").toString
-    val path = s"$tmp/idx"
-    Similarity.saveIvf(Similarity.buildIvf(base, nlist = 8), path)
-    assert(Similarity.ivfDeltaFraction(spark, path) === 0.0)
-    val merged = Similarity.appendIvfDelta(spark, path, delta)
-    assert(merged.lists.count() === 500L)
-    val frac = Similarity.ivfDeltaFraction(spark, path)
-    assert(math.abs(frac - 0.25) < 1e-9, s"100/400 appended, fraction $frac")
-    assert(Similarity.ivfRetrainDue(spark, path, maxDeltaFraction = 0.2))
-    assert(!Similarity.ivfRetrainDue(spark, path, maxDeltaFraction = 0.3))
-
-    val queries = emb.filter(col("vec_id") % 25 === 0)
-    val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
-    val mergedRecall = Similarity.recallAtK(
-      Similarity.ivfQuery(merged, emb, queries, k = 5, nprobe = 4), exact)
-    val rebuiltRecall = Similarity.recallAtK(
-      Similarity.ivfQuery(Similarity.buildIvf(emb, nlist = 8), emb, queries,
-        k = 5, nprobe = 4), exact)
-    info(f"IVF recall@5 merged=$mergedRecall%.3f rebuilt=$rebuiltRecall%.3f")
-    assert(mergedRecall >= rebuiltRecall - 0.1,
-      f"merged $mergedRecall%.3f lags rebuilt $rebuiltRecall%.3f by > 0.1")
-  }
-
-  test("maintainIvf appends under the threshold, retrains past it") {
-    val (nlist, iters) = (4, 1) // distinctive params → own index dir
-    val path = Similarity.ivfIndexPath(dir, nlist, iters)
-    val base = emb.filter(col("vec_id") < 400)
-    val d1 = emb.filter(col("vec_id") >= 400 && col("vec_id") < 420)
-    val d2 = emb.filter(col("vec_id") >= 420)
-    val idx0 = Similarity.maintainIvf(spark, dir, base, base, nlist, iters,
-      maxDeltaFraction = 0.5)
-    assert(idx0.lists.count() === 400L)
-    val idx1 = Similarity.maintainIvf(spark, dir, d1,
-      emb.filter(col("vec_id") < 420), nlist, iters, maxDeltaFraction = 0.5)
-    assert(idx1.lists.count() === 420L)
-    assert(math.abs(Similarity.ivfDeltaFraction(spark, path) - 0.05) < 1e-9)
-    val idx2 = Similarity.maintainIvf(spark, dir, d2, emb, nlist, iters,
-      maxDeltaFraction = 0.1)
-    assert(idx2.lists.count() === 500L)
-    assert(Similarity.ivfDeltaFraction(spark, path) === 0.0)
-  }
-
   test("maintainIvfPq appends under the threshold, retrains past it") {
     // distinctive params → own (dir, params) directory, no collision with
     // the e7 entry's persisted index

@@ -48,4 +48,27 @@ class IvfPqJobsSpec extends SparkSpec {
       s"meta read ${seen.scans.count(_ == "/meta")} times: the index was loaded more than once")
     assert(seen.jobs <= 11, s"maintainIvfPq append ran ${seen.jobs} jobs")
   }
+
+  test("a maintenance call on a fresh, tombstoned index reads the codes with their schema") {
+    val work = java.nio.file.Files.createTempDirectory("graft_ivfpq_jobs_t_").toString
+    emb.write.parquet(s"$work/embeddings.parquet")
+    val corpus = spark.read.parquet(s"$work/embeddings.parquet")
+    val (nlist, m, ksub, iters) = (8, 8, 8, 1)
+    val path = Similarity.ivfpqIndexPath(work, nlist, m, ksub, iters)
+    Similarity.loadOrBuildIvfPq(spark, work, corpus, nlist, m, ksub, iters)
+    import spark.implicits._
+    Similarity.tombstoneIds(spark, path, Seq(7L).toDF("vec_id")) // 1/500: no compaction
+    val empty = corpus.filter(lit(false))
+    var served: Similarity.IvfPqIndex = null
+    val seen = observe(spark, path) {
+      served = Similarity.maintainIvfPq(spark, work, empty, corpus, nlist, m, ksub, iters)
+    }
+    info(s"maintainIvfPq (fresh, tombstoned): ${seen.jobs} jobs, scans ${seen.scans}")
+    // served as it is: the log survives and the id is subtracted
+    assert(Similarity.tombstoneCount(spark, path) === 1L)
+    assert(served.codes.filter(col("cid") === 7L).isEmpty)
+    // measured 8; 9 while the tombstone count read the codes schemaless
+    // (one schema-inference job more)
+    assert(seen.jobs <= 8, s"maintainIvfPq on a fresh, tombstoned index ran ${seen.jobs} jobs")
+  }
 }

@@ -18,9 +18,9 @@ class IvfPqPersistSpec extends SparkSpec {
     val fresh = Similarity.buildIvfPq(emb, nlist = 16, m = 8, ksub = 16)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_spec_").toString
     val path = s"$tmp/idx"
-    assert(!Similarity.ivfpqIndexExists(spark, path), "no marker before save")
+    assert(!Similarity.indexComplete(spark, path), "no marker before save")
     Similarity.saveIvfPq(fresh, path)
-    assert(Similarity.ivfpqIndexExists(spark, path), "marker present after save")
+    assert(Similarity.indexComplete(spark, path), "marker present after save")
 
     val loaded = Similarity.loadIvfPq(spark, path, emb)
     assert(loaded.m === fresh.m && loaded.sub === fresh.sub)
@@ -87,7 +87,7 @@ class IvfPqPersistSpec extends SparkSpec {
     // identical results by reading the same on-disk artifact.
     val prev = Similarity.ivfpqIndexPath(dir, 16, 8, 16, 2)
     val idx1 = Similarity.loadOrBuildIvfPq(spark, dir, emb, nlist = 16, m = 8, ksub = 16)
-    assert(Similarity.ivfpqIndexExists(spark, prev), s"index not persisted at $prev")
+    assert(Similarity.indexComplete(spark, prev), s"index not persisted at $prev")
     val idx2 = Similarity.loadOrBuildIvfPq(spark, dir, emb, nlist = 16, m = 8, ksub = 16)
     val queries = emb.filter(col("vec_id") < 10)
     def run(idx: Similarity.IvfPqIndex) =

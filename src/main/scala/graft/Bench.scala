@@ -70,8 +70,8 @@ object Bench {
       }
     // Full-corpus export as a named entry (single run — IO-bound, and the
     // golden-byte spec covers correctness): meltAll over the reference's
-    // published CSVs → the complete writeAll dump. Where that corpus is
-    // absent the entry is skipped with its reason, not failed.
+    // published CSVs → the complete writeAllDistributed dump. Where that
+    // corpus is absent the entry is skipped with its reason, not failed.
     val wantExport = only.forall(_.contains("export_writeall"))
     val haveCorpus = java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ExportCorpus))
     val skipped =

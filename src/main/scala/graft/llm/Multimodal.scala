@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed by partition-batched decode /
@@ -54,17 +54,28 @@ object Multimodal {
     * payloads into one partition — random placement balances total decode
     * bytes per executor in expectation.
     */
-  def extractFeatures(media: DataFrame, targetPartitions: Int = 0): Dataset[MediaFeatures] = {
+  def extractFeatures(media: DataFrame, targetPartitions: Int = 0): Dataset[MediaFeatures] =
+    perPayload(media, targetPartitions)((id, data) =>
+      Some(decodeStub(data).copy(media_id = id)))
+
+  /** THE per-payload stage every decode / sniff entry point runs: an
+    * optional round-robin repartition (`targetPartitions <= 0` keeps the
+    * input's partitioning — and works on a streaming frame), then
+    * `kernel` over each (media_id, data) record inside one
+    * `mapPartitions` — per-partition setup (codec init, model load, …)
+    * belongs in this loop. The kernel returns any number of rows per
+    * payload: none drops an undecodable record, several explode one
+    * payload (frame sampling).
+    */
+  private def perPayload[T <: Product : TypeTag](media: DataFrame, targetPartitions: Int)(
+      kernel: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
     val spark = media.sparkSession
     import spark.implicits._
     val sized =
       if (targetPartitions > 0) media.repartition(targetPartitions)
       else media
     sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition setup happens HERE (codec init, model load, …)
-        it.map { case (id, data) => decodeStub(data).copy(media_id = id) }
-      }
+      .mapPartitions(_.flatMap { case (id, data) => kernel(id, data) })
   }
 
   final case class Frame(media_id: Long, frame_idx: Int, offset: Long,
@@ -78,27 +89,18 @@ object Multimodal {
     * for per-frame features.
     */
   def sampleFrames(media: DataFrame, frameSize: Int, stride: Int,
-                   maxFrames: Int, targetPartitions: Int = 0): Dataset[Frame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sized =
-      if (targetPartitions > 0) media.repartition(targetPartitions)
-      else media
-    sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, data) =>
-          Iterator.range(0, maxFrames)
-            .map(i => (i, i.toLong * stride))
-            .takeWhile { case (_, off) => off + frameSize <= data.length }
-            .map { case (i, off) =>
-              var s = 0L
-              var j = off.toInt
-              while (j < off + frameSize) { s += data(j) & 0xFF; j += 1 }
-              Frame(id, i, off, s)
-            }
+                   maxFrames: Int, targetPartitions: Int = 0): Dataset[Frame] =
+    perPayload(media, targetPartitions) { (id, data) =>
+      Iterator.range(0, maxFrames)
+        .map(i => (i, i.toLong * stride))
+        .takeWhile { case (_, off) => off + frameSize <= data.length }
+        .map { case (i, off) =>
+          var s = 0L
+          var j = off.toInt
+          while (j < off + frameSize) { s += data(j) & 0xFF; j += 1 }
+          Frame(id, i, off, s)
         }
-      }
-  }
+    }
 
   /** Resize stub (the image path): keep every `factor`-th byte — the
     * stage shape of a real resize (smaller binary out, metadata updated in
@@ -163,17 +165,9 @@ object Multimodal {
   /** Real-decode twin of [[extractFeatures]]: dimensions + per-channel
     * means via ImageIO, per-partition batched, undecodable rows dropped.
     */
-  def extractImageFeatures(media: DataFrame, targetPartitions: Int = 0): Dataset[ImageFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sized =
-      if (targetPartitions > 0) media.repartition(targetPartitions)
-      else media
-    sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, data) =>
-        decodeImage(data).map(_.copy(media_id = id))
-      })
-  }
+  def extractImageFeatures(media: DataFrame, targetPartitions: Int = 0): Dataset[ImageFeatures] =
+    perPayload(media, targetPartitions)((id, data) =>
+      decodeImage(data).map(_.copy(media_id = id)))
 
   /** Deterministic synthetic PNG: a 90×80 grid of 10×10 blocks whose
     * brightness is MurmurHash3(pattern, row, col) — plus a global
@@ -234,16 +228,9 @@ object Multimodal {
     * batched stage shape as [[extractImageFeatures]]; undecodable rows
     * drop.
     */
-  def imageDHashes(media: DataFrame, targetPartitions: Int = 0): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sized =
-      if (targetPartitions > 0) media.repartition(targetPartitions)
-      else media
-    sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, data) => dHash(data).map(id -> _) })
+  def imageDHashes(media: DataFrame, targetPartitions: Int = 0): DataFrame =
+    perPayload(media, targetPartitions)((id, data) => dHash(data).map(id -> _))
       .toDF("media_id", "simhash")
-  }
 
   /** Perceptual near-duplicate image pairs: real decode → dHash → the d4
     * pigeonhole chunk equi-join (any pair within Hamming `maxDist` shares
@@ -338,17 +325,9 @@ object Multimodal {
     * decode, undecodable rows dropped.
     */
   def extractAudioFeatures(media: DataFrame,
-                           targetPartitions: Int = 0): Dataset[AudioFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sized =
-      if (targetPartitions > 0) media.repartition(targetPartitions)
-      else media
-    sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, data) =>
-        decodeAudio(data).map(_.copy(media_id = id))
-      })
-  }
+                           targetPartitions: Int = 0): Dataset[AudioFeatures] =
+    perPayload(media, targetPartitions)((id, data) =>
+      decodeAudio(data).map(_.copy(media_id = id)))
 
   final case class SpectralFeatures(media_id: Long, sample_rate: Int,
                                     n_windows: Int, dominant_band: Int,
@@ -432,17 +411,9 @@ object Multimodal {
     * decode + Goertzel bands, undecodable rows dropped. */
   def audioSpectralFeatures(media: DataFrame, bandHz: Array[Double],
                             window: Int,
-                            targetPartitions: Int = 0): Dataset[SpectralFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sized =
-      if (targetPartitions > 0) media.repartition(targetPartitions)
-      else media
-    sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, data) =>
-        spectralBands(data, bandHz, window).map(_.copy(media_id = id))
-      })
-  }
+                            targetPartitions: Int = 0): Dataset[SpectralFeatures] =
+    perPayload(media, targetPartitions)((id, data) =>
+      spectralBands(data, bandHz, window).map(_.copy(media_id = id)))
 
   /** Deterministic synthetic tone: `nSamples` of a `freqHz` sine at
     * `amplitude` (of full scale), 16-bit mono PCM wrapped in a real WAV
@@ -523,20 +494,31 @@ object Multimodal {
     * not drop or kill on corrupt records; a downstream decode counts
     * them).
     */
-  def resampleAudio(media: DataFrame, targetRate: Int): DataFrame = {
+  def resampleAudio(media: DataFrame, targetRate: Int): DataFrame =
+    transformPayloads(media)(resampleWav(_, targetRate).map(("audio/wav", _)))
+
+  /** THE payload-transform stage ([[resampleAudio]], [[resizeImages]]):
+    * media frame in, media frame out, `kernel` mapping one payload to its
+    * new (mime, data). A kernel's None passes the record through
+    * UNCHANGED; `meta.n_bytes` follows the bytes actually emitted.
+    */
+  private def transformPayloads(media: DataFrame)(
+      kernel: Array[Byte] => Option[(String, Array[Byte])]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("mime"), col("data"), col("meta.source"))
+    asMedia(media.select(col("media_id"), col("mime"), col("data"), col("meta.source"))
       .as[(Long, String, Array[Byte], String)]
       .mapPartitions(_.map { case (id, mime, data, source) =>
-        val (outMime, outData) = resampleWav(data, targetRate)
-          .map(("audio/wav", _)).getOrElse((mime, data))
+        val (outMime, outData) = kernel(data).getOrElse((mime, data))
         (id, outMime, outData, outData.length.toLong, source)
-      })
-      .toDF("media_id", "mime", "data", "n_bytes", "source")
+      }))
+  }
+
+  /** (id, mime, data, n_bytes, source) rows as the media frame shape. */
+  private def asMedia(rows: Dataset[(Long, String, Array[Byte], Long, String)]): DataFrame =
+    rows.toDF("media_id", "mime", "data", "n_bytes", "source")
       .select(col("media_id"), col("mime"), col("data"),
         struct(col("n_bytes"), col("source")).as("meta"))
-  }
 
   /** Executor-rendered tone corpus keyed off the documents table (the
     * audio analog of the m4 PNG corpus): frequency and amplitude are
@@ -546,16 +528,13 @@ object Multimodal {
   def audioFromDocs(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
+    asMedia(docs.select(col("doc_id")).as[Long]
       .mapPartitions(_.map { id =>
         val data = syntheticToneWav(freqHz = 200.0 + (id % 20) * 55.0,
           nSamples = 2000, sampleRate = 8000,
           amplitude = 0.2 + (id % 5) * 0.15)
         (id, "audio/wav", data, data.length.toLong, "synth")
-      })
-      .toDF("media_id", "mime", "data", "n_bytes", "source")
-      .select(col("media_id"), col("mime"), col("data"),
-        struct(col("n_bytes"), col("source")).as("meta"))
+      }))
   }
 
   /** Real resize: scale so the longer edge is ≤ `maxDim` (never
@@ -565,37 +544,27 @@ object Multimodal {
     * rationale as [[decodeImage]]: a resize stage must not drop or kill
     * on corrupt records; a downstream decode stage counts them).
     */
-  def resizeImages(media: DataFrame, maxDim: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("mime"), col("data"), col("meta.source"))
-      .as[(Long, String, Array[Byte], String)]
-      .mapPartitions(_.map { case (id, mime, data, source) =>
-        val resized = for {
-          img <- readImage(data)
-          if math.max(img.getWidth, img.getHeight) > maxDim
-        } yield {
-          val s = maxDim.toDouble / math.max(img.getWidth, img.getHeight)
-          val (w, h) = (math.max(1, (img.getWidth * s).round.toInt),
-            math.max(1, (img.getHeight * s).round.toInt))
-          val out = new java.awt.image.BufferedImage(w, h,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g2 = out.createGraphics()
-          g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g2.drawImage(img, 0, 0, w, h, null)
-          g2.dispose()
-          val buf = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", buf)
-          ("image/png", buf.toByteArray)
-        }
-        val (outMime, outData) = resized.getOrElse((mime, data))
-        (id, outMime, outData, outData.length.toLong, source)
-      })
-      .toDF("media_id", "mime", "data", "n_bytes", "source")
-      .select(col("media_id"), col("mime"), col("data"),
-        struct(col("n_bytes"), col("source")).as("meta"))
-  }
+  def resizeImages(media: DataFrame, maxDim: Int): DataFrame =
+    transformPayloads(media) { data =>
+      for {
+        img <- readImage(data)
+        if math.max(img.getWidth, img.getHeight) > maxDim
+      } yield {
+        val s = maxDim.toDouble / math.max(img.getWidth, img.getHeight)
+        val (w, h) = (math.max(1, (img.getWidth * s).round.toInt),
+          math.max(1, (img.getHeight * s).round.toInt))
+        val out = new java.awt.image.BufferedImage(w, h,
+          java.awt.image.BufferedImage.TYPE_INT_RGB)
+        val g2 = out.createGraphics()
+        g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+        g2.drawImage(img, 0, 0, w, h, null)
+        g2.dispose()
+        val buf = new java.io.ByteArrayOutputStream()
+        javax.imageio.ImageIO.write(out, "png", buf)
+        ("image/png", buf.toByteArray)
+      }
+    }
 
   // ---- container-header sniffing (m6): dimensions WITHOUT decode ------
 
@@ -712,8 +681,8 @@ object Multimodal {
           // TOTAL step budget across every candidate walk: the scan is
           // offsets × chain-steps, and a crafted payload of long
           // almost-tiling chains would otherwise be O(n²) inside an
-          // executor task — the same hazard class as the r8 Long-advance
-          // hang. On exhaustion fall back to the EOF clamp (conservative
+          // executor task — the same hazard class as the Long-advance
+          // hang below. On exhaustion fall back to the EOF clamp (conservative
           // overcount, never a hang; this branch only runs on files
           // whose declaration is already corrupt).
           var scanBudget = 1L << 20
@@ -768,17 +737,9 @@ object Multimodal {
   /** Header-sniff a WAV media table — the [[imageHeaders]] stage shape
     * with [[sniffWav]] as the kernel; undecodable rows drop.
     */
-  def wavHeaders(media: DataFrame, targetPartitions: Int = 0): Dataset[WavHeader] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sized =
-      if (targetPartitions > 0) media.repartition(targetPartitions)
-      else media
-    sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, data) =>
-        sniffWav(data).map(_.copy(media_id = id))
-      })
-  }
+  def wavHeaders(media: DataFrame, targetPartitions: Int = 0): Dataset[WavHeader] =
+    perPayload(media, targetPartitions)((id, data) =>
+      sniffWav(data).map(_.copy(media_id = id)))
 
   /** Deterministic REAL image bytes for a media id: a solid-color
     * `(16 + id % 64) × (16 + id % 48)` image, PNG for even ids and JPEG
@@ -805,17 +766,9 @@ object Multimodal {
     * (round-robin repartition, per-partition loop) with
     * [[sniffDimensions]] as the kernel; undecodable rows drop.
     */
-  def imageHeaders(media: DataFrame, targetPartitions: Int = 0): Dataset[MediaHeader] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sized =
-      if (targetPartitions > 0) media.repartition(targetPartitions)
-      else media
-    sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, data) =>
-        sniffDimensions(data).map(_.copy(media_id = id))
-      })
-  }
+  def imageHeaders(media: DataFrame, targetPartitions: Int = 0): Dataset[MediaHeader] =
+    perPayload(media, targetPartitions)((id, data) =>
+      sniffDimensions(data).map(_.copy(media_id = id)))
 
   // ───────────────────────── video containers (m9) ─────────────────────────
 
@@ -1042,17 +995,9 @@ object Multimodal {
 
   /** Header-sniff a video media table — the [[imageHeaders]] stage shape
     * with [[sniffVideo]] as the kernel; undecodable rows drop. */
-  def videoHeaders(media: DataFrame, targetPartitions: Int = 0): Dataset[VideoHeader] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sized =
-      if (targetPartitions > 0) media.repartition(targetPartitions)
-      else media
-    sized.select(col("media_id"), col("data")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, data) =>
-        sniffVideo(data).map(_.copy(media_id = id))
-      })
-  }
+  def videoHeaders(media: DataFrame, targetPartitions: Int = 0): Dataset[VideoHeader] =
+    perPayload(media, targetPartitions)((id, data) =>
+      sniffVideo(data).map(_.copy(media_id = id)))
 
   // deterministic synthetic containers: closed-form fields of the id so
   // the generate→mux→sniff roundtrip is oracle-checkable (the m6/m7

@@ -146,21 +146,6 @@ object Extras {
        |SELECT node, CAST(d AS BIGINT) AS dist FROM d$g7bUnroll""".stripMargin
   }
 
-  /** Round-robin a small-split scan across the cluster before CPU-heavy
-    * per-row work (the PipelineOps.docs discipline, r13 here for the
-    * edit-distance joins): the single-file customer scan plans as ONE
-    * task, so ed1Pairs' variant explode ran serially — 2.3 s of a 3 s
-    * entry in one task (r13 profile). Parameterized on
-    * defaultParallelism, not a constant; scans that already have real
-    * split parallelism pass through untouched.
-    */
-  private def fanOut(s: org.apache.spark.sql.SparkSession,
-                     df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val par = s.sparkContext.defaultParallelism
-    val splits = df.inputFiles.length
-    if (splits > 0 && splits < 2 * par) df.repartition(par) else df
-  }
-
   /** Stable scratch path under java.io.tmpdir, namespaced by pid so
     * concurrent JVMs (verify vs bench) never collide; reused across
     * invocations within a process (writers use overwrite mode).
@@ -722,8 +707,10 @@ object Extras {
         |FROM c a JOIN c b ON a.c_custkey < b.c_custkey
         |WHERE abs(length(a.c_name) - length(b.c_name)) <= 1
         |  AND levenshtein(a.c_name, b.c_name) <= 1""".stripMargin) { (s, dir) =>
+      // fanned out: the single-file customer scan plans as ONE task, and
+      // the variant explode would otherwise run serially in it
       graft.ops.EditDistanceJoin.ed1Pairs(
-          fanOut(s, t(s, dir, "customer")), "c_custkey", "c_name")
+          PipelineOps.fanOut(s, t(s, dir, "customer")), "c_custkey", "c_name")
         .select("id1", "id2")
     },
 
@@ -742,7 +729,7 @@ object Extras {
         |WHERE abs(length(a.c_name) - length(b.c_name)) <= 2
         |  AND levenshtein(a.c_name, b.c_name) <= 2""".stripMargin) { (s, dir) =>
       graft.ops.EditDistanceJoin.ed2Pairs(
-          fanOut(s, t(s, dir, "customer")).filter(col("c_custkey") < 2000),
+          PipelineOps.fanOut(s, t(s, dir, "customer")).filter(col("c_custkey") < 2000),
           "c_custkey", "c_name")
         .select("id1", "id2")
     },
@@ -2757,7 +2744,7 @@ object Extras {
       // [2000, 20000] first cut covered 87% at sf0.01 and kept 7 or 8
       // files depending on where file 0's sampled boundary fell).
       val plan = graft.sources.ScanPlanner.plan(s, files,
-        range = Some(("o_orderkey", 2000.0, 3500.0)),
+        ranges = Seq(("o_orderkey", 2000.0, 3500.0)),
         point = Some(("o_custkey", keys)))
       require(plan.keptFiles.size < plan.totalFiles,
         s"range-clustered layout must prune: kept ${plan.keptFiles.size}/${plan.totalFiles}")
@@ -2797,7 +2784,7 @@ object Extras {
       val names = Seq("Customer#000000250", "Customer#000000321",
         "Customer#999999999") // the absent name exercises prune-to-nothing
       val plan = graft.sources.ScanPlanner.plan(s, files,
-        range = Some(("c_custkey", 200.0, 500.0)),
+        ranges = Seq(("c_custkey", 200.0, 500.0)),
         pointString = Some(("c_name", names)))
       require(plan.keptFiles.size < plan.totalFiles,
         s"range-clustered layout must prune: kept ${plan.keptFiles.size}/${plan.totalFiles}")

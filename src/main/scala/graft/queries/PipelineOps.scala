@@ -99,7 +99,7 @@ object PipelineOps {
     * count comes from the FILES (cheap listing), not `df.rdd` — asking the
     * RDD would force a full physical plan per call.
     */
-  private def fanOut(s: org.apache.spark.sql.SparkSession,
+  private[queries] def fanOut(s: org.apache.spark.sql.SparkSession,
                      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val par = s.sparkContext.defaultParallelism
     val splits = df.inputFiles.length
@@ -2416,7 +2416,7 @@ object PipelineOps {
         |        / len(string_split(text, ' '))::DOUBLE <= 0.8
         |GROUP BY source""".stripMargin) { (s, dir) =>
       val ss = EventStream.statefulSession(s)
-      val stream = graft.streaming.IngestDedup.readDocs(ss, dir)
+      val stream = EventStream.readDocuments(ss, dir)
       val ws = split(col("text"), " ")
       // ts spread bounded to 30 min — UNDER the 1-hour watermark — so the
       // (source, text) duplicates stay within the dedup window no matter
@@ -2885,7 +2885,7 @@ object PipelineOps {
     "t12_stream_ingest_dedup" -> Q(exactJaccardIdPairsSql) { (s, dir) =>
       val ss = EventStream.statefulSession(s)
       val cands = IngestDedup.candidatePairs(
-        IngestDedup.readDocs(ss, dir), n = 3, numHashes = 64, bands = 32)
+        EventStream.readDocuments(ss, dir), n = 3, numHashes = 64, bands = 32)
       val drained = EventStream.runToMemory(cands.toDF("id1", "id2"),
           s"t12_stream_${streamSeq.incrementAndGet()}", mode = "append")
         .distinct()

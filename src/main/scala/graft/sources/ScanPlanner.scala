@@ -41,13 +41,6 @@ object ScanPlanner {
     * groups carries stats for the column (the n_row_groups denominator)
     * and none intersects — a group with no harvestable stats can't be
     * ruled out, so its file survives. */
-  def planRange(spark: SparkSession, paths: Seq[String], column: String,
-                lo: Double, hi: Double): Seq[String] = {
-    requireUnambiguousNames(paths)
-    rangeKeptFrom(FooterStats.zoneMap(spark, paths),
-      FooterStats.fileRowGroupCounts(spark, paths), paths, column, lo, hi)
-  }
-
   private def rangeKeptFrom(zm: DataFrame, groups: DataFrame,
                             paths: Seq[String], column: String,
                             lo: Double, hi: Double): Seq[String] = {
@@ -86,13 +79,12 @@ object ScanPlanner {
   }
 
   /** Compose: the conjunction keeps the INTERSECTION of each index's
-    * survivors. Any leg may be absent; `ranges` takes several range
-    * predicates at once — on a z-ordered layout ([[graft.ops.ZOrder]])
+    * survivors. Any leg may be absent; `ranges` takes any number of
+    * range predicates — on a z-ordered layout ([[graft.ops.ZOrder]])
     * each interleaved dimension's zone maps are tight simultaneously,
     * so multi-dimension conjunctions prune multiplicatively where a 1-D
     * sort prunes on its sort key alone (asserted in ScanPlannerSpec). */
   def plan(spark: SparkSession, paths: Seq[String],
-           range: Option[(String, Double, Double)] = None,
            point: Option[(String, Seq[Long])] = None,
            ranges: Seq[(String, Double, Double)] = Nil,
            pointString: Option[(String, Seq[String])] = None): ScanPlan = {
@@ -102,15 +94,14 @@ object ScanPlanner {
     // the bloom probe runs only over the files the ranges already kept
     // — per-plan index I/O is two footer passes + blooms on survivors,
     // independent of how many predicates compose.
-    val allRanges = range.toSeq ++ ranges
     val rangeKept =
-      if (allRanges.isEmpty) paths
+      if (ranges.isEmpty) paths
       else {
         requireUnambiguousNames(paths)
         val zm = FooterStats.zoneMap(spark, paths).localCheckpoint()
         val groups = FooterStats.fileRowGroupCounts(spark, paths)
           .localCheckpoint()
-        allRanges.foldLeft(paths) { case (kept, (c, lo, hi)) =>
+        ranges.foldLeft(paths) { case (kept, (c, lo, hi)) =>
           if (kept.isEmpty) kept else rangeKeptFrom(zm, groups, kept, c, lo, hi)
         }
       }

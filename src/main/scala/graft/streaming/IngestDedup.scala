@@ -25,17 +25,6 @@ import org.apache.spark.sql.types._
   */
 object IngestDedup {
 
-  /** Streaming source over the documents parquet (one-element glob, same
-    * trick as [[EventStream.readEvents]]). Schema comes from a batch
-    * probe of the same file so physical-type drift in regenerated
-    * testdata can never desynchronize the stream read from the batch
-    * read (see [[graft.Tables.physicalSchema]]).
-    */
-  def readDocs(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(graft.Tables.physicalSchema(spark, dir, "documents"))
-      .option("basePath", dir)
-      .parquet(s"$dir/{documents.parquet}")
-
   /** Streaming candidate pairs (id1 < id2), possibly duplicated across
     * bands/micro-batches — dedup downstream (batch `distinct` after the
     * drain, or streaming dropDuplicates if the consumer is also a

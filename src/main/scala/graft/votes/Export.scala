@@ -98,8 +98,8 @@ object Export {
     "stamp_raw", "member_idx", "member_name", "district", "party", "letter")
 
   /** Assemble one (year, chamber) matrix's CSV bytes from its long rows —
-    * the pure-Scala twin of [[VoteMatrix.toCsvBytes]] (byte-identical,
-    * asserted in ExportSpec), built to run INSIDE an executor task. Rows
+    * the pure-Scala twin of [[VoteMatrix.toCsvBytes]] (byte-identical per
+    * group, asserted in ExportSpec), built to run INSIDE an executor task. Rows
     * must follow [[matrixCols]] order; one group is bounded by the matrix
     * itself (~1.6k rolls × ~210 legislators), so in-memory assembly is the
     * output's own size.
@@ -127,13 +127,15 @@ object Export {
     sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Distributed full-corpus export: ONE shuffle keyed by (year, chamber),
-    * each group's CSV assembled AND written inside its executor task via
-    * the Hadoop FileSystem API (file://, hdfs://, s3a:// — whatever `root`
-    * resolves to). No bytes ever pass through the driver: the former
-    * toLocalIterator + driver write loop serialized every finished matrix
-    * through one machine, which caps export throughput at the driver NIC
-    * at corpus scale; here the only driver work is scheduling. The
+  /** Write every (year, chamber) group under `root` in the vote_data
+    * layout (dump.py:40-66) — the distributed full-corpus export: ONE
+    * shuffle keyed by (year, chamber), each group's CSV assembled AND
+    * written inside its executor task via the Hadoop FileSystem API
+    * (file://, hdfs://, s3a:// — whatever `root` resolves to). No bytes
+    * ever pass through the driver: a toLocalIterator + driver write loop
+    * would serialize every finished matrix through one machine, capping
+    * export throughput at the driver NIC at corpus scale; here the only
+    * driver work is scheduling. The
     * driver's Hadoop configuration ships via one serializable carrier
     * (graft.sources.SerializableHadoopConf) so task-side FileSystem
     * resolution honours session-level fs settings.
@@ -211,25 +213,4 @@ object Export {
       }
   }
 
-  /** Write every complete (year, chamber) group under `root` in the
-    * vote_data layout (dump.py:40-66). Small-scale verifier twin of
-    * [[writeAllDistributed]] (per-group Spark pivot via
-    * [[VoteMatrix.writeCsv]]; byte equivalence asserted in ExportSpec).
-    */
-  def writeAll(spark: SparkSession, long: DataFrame, root: String): Unit = {
-    // one upstream computation for the whole export: the per-group loop
-    // below filters `long` once per (year, chamber) — ~38 times at the
-    // reference shape — and without the persist each filter would re-run
-    // the full join pipeline above
-    val cached = long.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val groups = cached.select("year", "chamber").distinct()
-        .orderBy("year", "chamber").collect()
-      for (g <- groups) {
-        val (y, c) = (g.getInt(0), g.getInt(1))
-        VoteMatrix.writeCsv(cached.filter(col("year") === y && col("chamber") === c),
-          root, y, c)
-      }
-    } finally cached.unpersist()
-  }
 }

@@ -123,9 +123,9 @@ object VoteMatrix {
 
   /** Read every CSV under a vote_data-layout root into one long DataFrame.
     * The per-file parse runs in EXECUTOR TASKS (one per file), not a
-    * driver loop: the former 38-iteration driver melt single-threaded
-    * ~2M long rows through one core and shipped them out via parallelize
-    * — the read-side mirror of the export write bottleneck. Listing and
+    * driver loop: a 38-iteration driver melt would single-thread ~2M long
+    * rows through one core and ship them out via parallelize — the
+    * read-side mirror of the export write bottleneck. Listing and
     * byte access go through the Hadoop FileSystem of the root's scheme,
     * so hdfs:// and s3a:// corpora work like file://.
     */
@@ -194,14 +194,5 @@ object VoteMatrix {
       sb ++= formatCsvRow(r.getString(1) +: r.getInt(2).toString +: r.getString(3) +: cells)
     }
     sb.toString.getBytes(StandardCharsets.UTF_8)
-  }
-
-  /** Write one (year, chamber) matrix to `vote_data/<year>/<Chamber>.csv`
-    * under `root`.
-    */
-  def writeCsv(long: DataFrame, root: String, year: Int, chamber: Int): Unit = {
-    val dir = Paths.get(root, year.toString)
-    Files.createDirectories(dir)
-    Files.write(dir.resolve(Chamber.title(chamber) + ".csv"), toCsvBytes(long))
   }
 }

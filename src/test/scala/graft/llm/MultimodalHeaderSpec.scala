@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** The header sniffer (m6) against GROUND TRUTH — real encoder output
   * whose dimensions are known because we chose them:
@@ -257,5 +258,35 @@ class MultimodalHeaderSpec extends SparkSpec {
     val got = Multimodal.imageHeaders(rows.toDF("media_id", "data"))
       .collect().map(m => (m.media_id, m.fmt, m.width, m.height)).sorted
     assert(got.toSeq === Seq((1L, "png", 20, 10), (2L, "jpeg", 8, 24)))
+
+    // every per-payload stage: two decodable payloads (ids 1, 2) and one
+    // corrupt one (id 3), with and without the stage's own repartition
+    val images = Seq(encode("png", 20, 10), encode("jpeg", 8, 24))
+    val wavs = Seq(Multimodal.syntheticToneWav(440.0, 2000, 8000, 0.5),
+      Multimodal.syntheticToneWav(1000.0, 1200, 8000, 0.3))
+    val videos = Seq(Multimodal.syntheticMkvBytes(1L), Multimodal.syntheticMp4Bytes(2L))
+    type Stage = (DataFrame, Int) => Dataset[_]
+    val stages: Seq[(String, Seq[Array[Byte]], Stage, Set[Long])] = Seq(
+      ("imageHeaders", images, Multimodal.imageHeaders(_, _), Set(1L, 2L)),
+      ("wavHeaders", wavs, Multimodal.wavHeaders(_, _), Set(1L, 2L)),
+      ("videoHeaders", videos, Multimodal.videoHeaders(_, _), Set(1L, 2L)),
+      ("extractImageFeatures", images, Multimodal.extractImageFeatures(_, _), Set(1L, 2L)),
+      ("imageDHashes", images, Multimodal.imageDHashes(_, _), Set(1L, 2L)),
+      ("extractAudioFeatures", wavs, Multimodal.extractAudioFeatures(_, _), Set(1L, 2L)),
+      ("audioSpectralFeatures", wavs,
+        Multimodal.audioSpectralFeatures(_, Array(440.0, 1000.0), 200, _), Set(1L, 2L)),
+      // frame sampling decodes nothing: a payload shorter than one frame
+      // (the 7-byte corrupt one) emits no frame
+      ("sampleFrames", images, Multimodal.sampleFrames(_, 16, 16, 4, _), Set(1L, 2L)),
+      // the stub decodes nothing either, and keeps every row
+      ("extractFeatures", images, Multimodal.extractFeatures(_, _), Set(1L, 2L, 3L)))
+    for ((name, good, stage, want) <- stages; tp <- Seq(0, 2)) {
+      val media = ((1L, good(0)) +: (2L, good(1)) +: Seq((3L, "garbage".getBytes)))
+        .toDF("media_id", "data")
+      val out = stage(media, tp).toDF()
+      val ids = out.select("media_id").as[Long].collect()
+      assert(ids.toSet === want, s"$name at targetPartitions=$tp")
+      if (tp > 0) assert(out.rdd.getNumPartitions === tp, s"$name repartition")
+    }
   }
 }

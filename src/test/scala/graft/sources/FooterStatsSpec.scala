@@ -40,8 +40,8 @@ class FooterStatsSpec extends SparkSpec {
     }
 
     // predicate k in [150, 250] touches files 1 and 2 only
-    val kept = FooterStats.pruneFiles(zm, "k", 150, 250)
-      .as[String].collect().sorted
+    val kept = ScanPlanner.plan(spark, files, ranges = Seq(("k", 150.0, 250.0)))
+      .keptFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toArray.sorted
     val expected = files.map(f => new org.apache.hadoop.fs.Path(f).getName)
       .filter(n => {
         val owner = files.indexWhere(_.endsWith(n))
@@ -71,7 +71,8 @@ class FooterStatsSpec extends SparkSpec {
     val v = zm.filter(col("column_name") === "v").collect().head
     assert(v.getAs[Double]("min_val") === -3.25)
     assert(v.getAs[Double]("max_val") === 9.75)
-    assert(FooterStats.pruneFiles(zm, "v", 100.0, 200.0).count() === 0L)
+    assert(ScanPlanner.plan(spark, Seq(file), ranges = Seq(("v", 100.0, 200.0)))
+      .keptFiles.isEmpty)
   }
 
   test("bloom probe: no false negatives; absent keys mostly pruned; FP rate sane") {

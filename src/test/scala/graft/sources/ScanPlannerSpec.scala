@@ -34,7 +34,7 @@ class ScanPlannerSpec extends SparkSpec {
   test("range and point legs prune independently; the plan keeps the intersection") {
     val files = layout()
     // range k ∈ [150, 250] → files 1 and 2 can intersect
-    val rangeKept = ScanPlanner.planRange(spark, files, "k", 150, 250)
+    val rangeKept = ScanPlanner.plan(spark, files, ranges = Seq(("k", 150.0, 250.0))).keptFiles
     assert(rangeKept.toSet === Set(files(1), files(2)), s"range kept $rangeKept")
     // point b = 2000005 → lives in file 2 only (blooms prove the rest out)
     val pointKept = ScanPlanner.planPoint(spark, files, "b", Seq(2000005L))
@@ -43,7 +43,7 @@ class ScanPlannerSpec extends SparkSpec {
       s"disjoint-b files must bloom-prune: $pointKept")
 
     val plan = ScanPlanner.plan(spark, files,
-      range = Some(("k", 150.0, 250.0)), point = Some(("b", Seq(2000005L))))
+      ranges = Seq(("k", 150.0, 250.0)), point = Some(("b", Seq(2000005L))))
     assert(plan.keptFiles === Seq(files(2)), s"intersection: ${plan.keptFiles}")
     assert(plan.prunedFiles === 3)
 
@@ -59,7 +59,7 @@ class ScanPlannerSpec extends SparkSpec {
 
   test("files-read: the planned scan reads fewer files than the table holds") {
     val files = layout()
-    val plan = ScanPlanner.plan(spark, files, range = Some(("k", 0.0, 99.0)))
+    val plan = ScanPlanner.plan(spark, files, ranges = Seq(("k", 0.0, 99.0)))
     assert(plan.keptFiles === Seq(files(0)))
     val scanned = ScanPlanner.scan(spark, plan, files)
     scanned.collect()
@@ -71,7 +71,7 @@ class ScanPlannerSpec extends SparkSpec {
     val files = layout()
     // v is BINARY — the zone map keeps INT64/DOUBLE only, so the planner
     // has no evidence and must keep every file
-    val kept = ScanPlanner.planRange(spark, files, "v", 0.0, 1.0)
+    val kept = ScanPlanner.plan(spark, files, ranges = Seq(("v", 0.0, 1.0))).keptFiles
     assert(kept === files, "no stats ⇒ no pruning, never an empty plan")
   }
 
@@ -151,11 +151,11 @@ class ScanPlannerSpec extends SparkSpec {
     // predicate k ∈ [150, 199]: provably outside the no-stats file's data,
     // but nothing in its FOOTER proves that — it must survive; the
     // stats-carrying file intersects and survives too
-    val kept = ScanPlanner.planRange(spark, files, "k", 150, 199)
+    val kept = ScanPlanner.plan(spark, files, ranges = Seq(("k", 150.0, 199.0))).keptFiles
     assert(kept === files,
       s"a stats-less file must never prune (cannot prove absence): $kept")
     // and the inverse range prunes ONLY the provable file
-    val kept2 = ScanPlanner.planRange(spark, files, "k", 500, 600)
+    val kept2 = ScanPlanner.plan(spark, files, ranges = Seq(("k", 500.0, 600.0))).keptFiles
     assert(kept2 === Seq(files(0)),
       s"only the stats-carrying file is provably out: $kept2")
   }

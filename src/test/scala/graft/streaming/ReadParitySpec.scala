@@ -42,7 +42,7 @@ class ReadParitySpec extends SparkSpec {
   test("documents/embeddings: streamed row counts and key sums match batch") {
     for ((table, reader, key) <- Seq(
       ("documents",
-        (d: String) => IngestDedup.readDocs(spark, d), "doc_id"),
+        (d: String) => EventStream.readDocuments(spark, d), "doc_id"),
       ("embeddings",
         (d: String) => VectorIngest.readEmbeddings(spark, d), "vec_id"))) {
       val batch = graft.Tables.t(spark, dir, table)

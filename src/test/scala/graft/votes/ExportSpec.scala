@@ -153,42 +153,26 @@ class ExportSpec extends SparkSpec {
   }
 
   test("writeAllDistributed emits byte-identical files to the per-group pivot path") {
-    // the distributed single-shuffle export and the driver-loop verifier
-    // must agree byte-for-byte; also pin both against the input files via
-    // the melt roundtrip (pivot∘melt = id): every fixture, plus two
-    // published files where mounted
+    // the distributed single-shuffle export and the Spark-pivot formatter
+    // (VoteMatrix.toCsvBytes of the file's (year, chamber) group) must
+    // agree byte-for-byte; also pin both against the input files via the
+    // melt roundtrip (pivot∘melt = id): every fixture, plus two published
+    // files where mounted
     val inputs = VoteFixtures.matrices ++
       VoteFixtures.published(2023, Chamber.HOUSE) ++
       VoteFixtures.published(2019, Chamber.SENATE)
     val melted = inputs.map(m => VoteMatrix.melt(spark, m.path, m.year, m.chamber))
       .reduce(_ unionByName _)
     val d1 = java.nio.file.Files.createTempDirectory("graft_wad_").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_wa_").toString
     Export.writeAllDistributed(spark, melted, d1)
-    Export.writeAll(spark, melted, d2)
     for (m <- inputs; rel = m.rel) {
       val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d1, rel))
-      val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d2, rel))
+      val b = VoteMatrix.toCsvBytes(
+        melted.filter($"year" === m.year && $"chamber" === m.chamber))
       val g = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(m.path))
       assert(java.util.Arrays.equals(a, b), s"$rel: distributed ≠ pivot path")
       assert(java.util.Arrays.equals(a, g), s"${m.path}: distributed ≠ input bytes")
     }
-  }
-
-  test("writeAll computes the long plan once, not once per group") {
-    import org.apache.spark.sql.functions.udf
-    val acc = spark.sparkContext.longAccumulator("export_scan_rows")
-    val tick = udf { (s: String) => acc.add(1); s }
-    val counted = long.withColumn("roll_name", tick($"roll_name"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_writeall_").toString
-    Export.writeAll(spark, counted, dir)
-    val n = long.count()
-    // persist means ≤ one UDF call per row (2n allows a re-materialization
-    // under cache eviction; the unpersisted shape was ≥ (groups+1) × n)
-    assert(acc.value <= 2 * n,
-      s"long plan recomputed per group: ${acc.value} UDF calls for $n rows")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "2023", "House.csv")))
   }
 
   test("export bytes include conditional District/Party rows") {
